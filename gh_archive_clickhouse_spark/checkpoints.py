@@ -1,29 +1,37 @@
-"""Deterministic release of ``localCheckpoint`` block storage.
+"""Pinning frames in the block manager and freeing them again.
 
 ``df.localCheckpoint(eager=True)`` parks the frame's rows in the block
 manager as a checkpointed RDD whose storage is reclaimed only when the
 JVM ContextCleaner eventually notices the RDD become unreachable —
-fine for a short-lived job, wrong for the two long-lived shapes this
-engine runs:
+fine for a short-lived job, wrong for the long-lived shapes this
+engine runs (a resident query session re-invoking builders, a
+long-running ingest stream folding epochs for its whole lifetime).
+Every checkpoint in the package takes one of three shapes, and the two
+that free their blocks do it through :func:`release_checkpoint`:
 
-* a RESIDENT QUERY SESSION re-invoking builders (bench, the driver's
-  oracle gate) — handled by ``plans.common.snapshot_result``, which
-  keys the previous result per query and releases it on re-invocation;
-* a LONG-RUNNING INGEST STREAM whose epoch folds take one
-  lineage-break checkpoint per fold for the stream's whole lifetime
-  (``streaming.dedup_stream``: the major-fold rewrite and the
-  cluster-label refresh) — those blocks are dead the moment the fold's
-  overwrite commits, so they are released explicitly right there
-  instead of accumulating between ContextCleaner GC cycles.
+* lazy ``plans.common.materialize`` — a compute-once barrier for
+  frames with several consumers inside one builder, whose blocks are
+  left to the ContextCleaner (or which is written to a durable
+  directory when one is configured);
+* keyed ``plans.common.snapshot_result`` — a builder's RESULT frame,
+  kept per query key and released when the next invocation under the
+  same key replaces it, so a resident session holds O(1) snapshots
+  per query;
+* scoped :func:`pinned` — a frame pinned for the length of a ``with``
+  block and released on exit (the epoch folds and label refresh of
+  ``streaming.dedup_stream``, per-batch frames with two consumers, a
+  stream's fixed quantizer), whose blocks are dead the moment the
+  block's work commits.
 
-Both paths share this module's handle-fetch primitive. Leaf module by
-design: it imports nothing from the package, so every layer (plans,
-streaming, operators) can use it without cycles.
+Leaf module by design: it imports nothing from the package, so every
+layer (plans, streaming, operators) can use it without cycles.
 """
 
 from __future__ import annotations
 
+import contextlib
 import warnings
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
@@ -32,6 +40,21 @@ from pyspark.sql import DataFrame
 # versa) — each misses for a different reason and each deserves its
 # one visible report.
 _WARNED_CAUSES: set[str] = set()
+
+
+@contextlib.contextmanager
+def pinned(df: DataFrame) -> Iterator[DataFrame]:
+    """Eagerly ``localCheckpoint`` ``df`` for the ``with`` block (one
+    job computes it into the block manager; the yielded frame reads
+    those blocks with its lineage cut) and release the blocks on exit,
+    error or not: nothing may use the frame (or a plan built over it)
+    after the block, and a retry after an error rebuilds it from its
+    sources."""
+    snap = df.localCheckpoint(eager=True)
+    try:
+        yield snap
+    finally:
+        release_checkpoint(snap)
 
 
 def checkpoint_rdd_handle(df: DataFrame):
@@ -54,10 +77,6 @@ def release_checkpoint(df: DataFrame) -> bool:
 
     The caller must be done with ``df``: any later action on the frame
     (or on a plan referencing it) fails with a missing-block error.
-    The fold sites call this only after their overwrite committed —
-    the next fold re-reads from disk, never from these blocks — or in
-    a ``finally`` where a failed write is about to be recomputed from
-    scratch by the stream's replay anyway.
 
     Degradation is VISIBLE (one RuntimeWarning per process per cause —
     handle-unreachable and unpersist-failed are distinct causes, so a

@@ -25,7 +25,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gh_archive_clickhouse_spark.checkpoints import checkpoint_rdd_handle
+from gh_archive_clickhouse_spark.checkpoints import release_checkpoint
 
 # Spark datetime pattern ≍ DuckDB strftime('%Y-%m-%d %H:%M:%S.%f'):
 # microseconds, zero-padded to 6.
@@ -275,17 +275,11 @@ def materialize(
     return df.localCheckpoint(eager=False)
 
 
-# (application id, key) -> the checkpointed RDD backing the PREVIOUS
-# result returned under that key, released when a new one replaces it.
-_RESULT_SNAPSHOTS: dict[tuple[str, str], object] = {}
-# Tombstones: (application id, key) pairs whose previous result frame
-# was invalidated by a re-invocation. A caller whose action on an OLD
-# result frame dies with an obscure "checkpoint block not found" can
-# map the failure to its real cause here (the documented
-# invalidation-on-re-invocation contract), instead of chasing a
-# phantom executor loss.
-RELEASED_RESULT_KEYS: set[tuple[str, str]] = set()
-_SNAPSHOT_RELEASE_WARNED = False
+# (application id, key) -> [the frame last returned under that key,
+# plus its predecessor if that one's release failed]. A failed release
+# is retried once, on the next invocation; after that the frame is left
+# to the ContextCleaner, so a key never holds more than two frames.
+_RESULT_SNAPSHOTS: dict[tuple[str, str], list[DataFrame]] = {}
 
 
 def snapshot_result(df: DataFrame, key: str) -> DataFrame:
@@ -301,77 +295,24 @@ def snapshot_result(df: DataFrame, key: str) -> DataFrame:
     action on that frame fails at block-fetch time). Callers that need
     two results of the same query live at once must collect the first
     before re-invoking — which every harness (bench, driver, tests)
-    already does. An (app, key) pair in :data:`RELEASED_RESULT_KEYS`
-    records that AT LEAST ONE past re-invocation under that key
-    released its predecessor's blocks deterministically, so such a
-    failure can be traced to this contract; a failed release adds no
-    tombstone (those blocks stay live until the ContextCleaner
-    reclaims them) and leaves an earlier generation's tombstone
-    standing — that release really happened, and a caller still
-    holding THAT generation's frame is exactly who needs the trace.
+    already does. A session without a reachable ``sparkContext``
+    (connect-style APIs) registers nothing; its snapshots are left to
+    the JVM ContextCleaner.
     """
     out = df.localCheckpoint(eager=True)
-    # sparkContext and the internal-plan handle are both absent on
-    # connect-style APIs — reaching either is part of the guarded
-    # fast path, not a precondition.
-    jrdd = checkpoint_rdd_handle(out)
     try:
         app = out.sparkSession.sparkContext.applicationId
     except Exception:
-        app = None
-    if jrdd is None or app is None:
-        # Degrading to cleaner-based release must be VISIBLE (once):
-        # callers believe the O(1)-storage contract holds, and on an
-        # API where the LogicalRDD handle isn't reachable (e.g. Spark
-        # Connect) snapshots would silently accumulate again.
-        global _SNAPSHOT_RELEASE_WARNED
-        if not _SNAPSHOT_RELEASE_WARNED:
-            _SNAPSHOT_RELEASE_WARNED = True
-            import warnings
-
-            warnings.warn(
-                "snapshot_result: checkpointed-RDD handle not "
-                "reachable on this Spark API; previous-result release "
-                "is disabled and snapshots accumulate until the JVM "
-                "ContextCleaner reclaims them",
-                RuntimeWarning,
-                stacklevel=2,
-            )
         return out
-    # Registry update only AFTER both handles resolved: popping the
-    # previous entry before fetching the new frame's handle would, on
-    # a fetch failure, drop the old registration without installing a
-    # successor — release silently disabled for that key from then on
-    # (the degradation warning fires only once globally).
-    prev = _RESULT_SNAPSHOTS.pop((app, key), None)
-    if prev is not None:
-        try:
-            prev.unpersist(False)
-        except Exception:
-            # The tombstone asserts "the old blocks WERE freed"; a
-            # failed unpersist leaves THIS generation's blocks live,
-            # so it must not ADD one. But it must not discard an
-            # earlier generation's tombstone either: that release
-            # really ran, and the caller who can still hit a
-            # block-fetch failure is precisely one holding that older
-            # frame — erasing the record would misroute the one
-            # diagnostic the set exists for, while this generation's
-            # (live, un-released) blocks can't produce a fetch
-            # failure that would consult it. One keyed bit can't
-            # carry per-generation truth; "some past release ran" is
-            # the reading that stays truthful in both directions
-            # (review pass over the r12 discard, which overcorrected
-            # the advisor-r11 add-on-failure bug).
-            pass
-        else:
-            RELEASED_RESULT_KEYS.add((app, key))
-    # entries from stopped sessions hold dead references — prune them
-    # (and their tombstones) so both stay O(keys), not O(keys x sessions)
+    prev = _RESULT_SNAPSHOTS.pop((app, key), [])
+    for f in prev[1:]:
+        release_checkpoint(f)
+    retry = [f for f in prev[:1] if not release_checkpoint(f)]
+    # entries from stopped sessions hold dead references — drop them
+    # so the registry stays O(keys), not O(keys x sessions)
     for k in [k for k in _RESULT_SNAPSHOTS if k[0] != app]:
         del _RESULT_SNAPSHOTS[k]
-    for k in [k for k in RELEASED_RESULT_KEYS if k[0] != app]:
-        RELEASED_RESULT_KEYS.discard(k)
-    _RESULT_SNAPSHOTS[(app, key)] = jrdd
+    _RESULT_SNAPSHOTS[(app, key)] = [out] + retry
     return out
 
 

@@ -54,63 +54,20 @@ WINDOW = 50
 # older code, i.e. are effectively no rows — so these pin to the front
 # of the window until a driver row from _CHANGED_ROUND or later lands
 # for them, at which point the pin expires per query automatically).
-_CHANGED_ROUND = 15
+_CHANGED_ROUND = 17
+# These builders (or the operators and sinks they run) changed in r16
+# after its oracle rows were taken, so only a row from r17 on verifies
+# them.
 _CHANGED = (
-    # r15 lands the LAST rounding-class patch (artifacts/
-    # r15_jaccard_verified.patch): shingle_jaccard — THE shared LSH
-    # verification formula (operators/dedup.py) — drops its 6-dp
-    # round, Spark builder and both oracle SQL mirrors together.
-    # Shingle-union denominators (640, 3200, ...) are regime-(a)
-    # half-boundary rationals (2j+1)/(2^7*5^t), t>=1 — the class
-    # that flipped qe4/qx56 — while int/int double quotients are
-    # bit-deterministic in both engines. Window arithmetic was
-    # pre-verified by tests/test_registry_rotation.py::
-    # test_r15_jaccard_landing_window_fits: qx9/qx20/qx57 are
-    # r12-stale (free), qx26/qx31/qx42/qx43/qx56 are r13-fresh and
-    # fit r15's free slots with zero staleness-floor violations.
-    # All 8 consumers of the shared formula pin:
-    "qx9_lsh_candidates",
-    "qx20_chargram_jaccard",
-    "qx26_dedup_clusters",
-    "qx31_dedup_survivors",
+    "qx52_bpe_encode",
     "qx42_preprocess_pipeline",
-    "qx43_lsh_recall_probe",
-    "qx56_quality_dedup_cut",
-    "qx57_split_leakage_cut",
-    # With this landing the rounding class is CLOSED: every remaining
-    # F.round site in the tree is in SURVEY's audited-safe ledger
-    # (fixed-point re-synchronizers over float-derived inputs, e.g.
-    # qx25's centroid mean where DuckDB's DECIMAL(38,20)->DOUBLE cast
-    # double-rounds past 2^53 unscaled — measured, load-bearing).
-    # Scale scoping (r15, per ADVICE): qt21/qt23/qt24's unrounded
-    # decimal-sum->double quotients are bit-identical ONLY while the
-    # unscaled sums stay below 2^53 (qt23 crosses ~sf2.4, qt21 ~sf6);
-    # the verified envelope is sf<=2 and
-    # tests/test_knife_edge.py::test_decimal_sum_2_53_bound_at_max_
-    # verified_sf enforces the bound. qt32/qx19/qx28 are pure
-    # integer-ratio quotients — bit-deterministic at any scale.
-    #
-    # r15 OPTIMIZATION-round pins (results bit-identical, each
-    # re-verified vs the DuckDB oracle pre-commit; code changed, so
-    # recorded rows describe older builders). Pinned: the
-    # driver-composed mixture rate table + fused one-scan spec
-    # (qx60/qs14/qs15; also qx42's mixture stage, already pinned
-    # above), qs15's overlapped per-batch sinks, the Expand-free
-    # contamination counts (qx23; qx42's decon stage), qx28's
-    # single-pass totals (not pinnable, see below), and qx32 for the
-    # explode-form CC edge symmetrization on the embedding path.
-    # NOT pinned (the window staleness budget allows only 5 extra
-    # slots — the rotation tests enforce it): the other
-    # two-half-source consumers (qs4/qs7/qs10/qs11/qs12/qs13) whose
-    # change is source-prep outside the result lineage, the
-    # remaining explode-CC consumers, which the jaccard pins above
-    # already carry (qx26/qx31/qx42/qx56 exercise the same
-    # operator), and qx28 (r14-fresh row, trivially value-identical
-    # integer re-aggregation) — all rotate back under the normal
-    # staleness schedule.
-    "qx60_mixture_resample",
-    "qx23_ngram_contamination",
     "qx32_semantic_dedup",
+    "qx35_pq_adc_topk",
+    "qx51_bpe_vocab_build",
+    "qx28_mixture_weights",
+    "qx60_mixture_resample",
+    "qs4_stream_incremental_lsh",
+    "qs13_stream_dedup_survivors",
     "qs14_stream_mixture_gate",
     "qs15_stream_preprocess_pipeline",
 )

@@ -24,6 +24,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gh_archive_clickhouse_spark.checkpoints import pinned
 from gh_archive_clickhouse_spark.plans.common import (
     Query,
     read,
@@ -311,15 +312,15 @@ def qs4_stream_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.awaitTermination()
         # Explicit schema: a zero-candidate corpus leaves the pairs log
         # with no data files, where schema inference would throw; the
-        # read then yields the correct EMPTY frame. Eager checkpoint
-        # pins the result in the block manager so the scratch dir can
-        # be deleted before the caller consumes the frame.
-        return (
+        # read then yields the correct EMPTY frame. The snapshot pins
+        # the result in the block manager so the scratch dir can be
+        # deleted before the caller consumes the frame.
+        return snapshot_result(
             spark.read.schema(PAIRS_SCHEMA)
             .parquet(f"{base}/pairs")
             .select("doc_a", "doc_b")
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            "qs4",
         )
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -428,8 +429,8 @@ def qs7_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .start()
             )
             q.awaitTermination()
-        return rollup_view(spark, f"{base}/partials").localCheckpoint(
-            eager=True
+        return snapshot_result(
+            rollup_view(spark, f"{base}/partials"), "qs7"
         )
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -496,7 +497,7 @@ def qs8_stream_exactly_once_dedup(
                 "user_id",
                 "event_type",
             )
-        return out.localCheckpoint(eager=True)
+        return snapshot_result(out, "qs8")
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -551,7 +552,7 @@ def qs9_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         out = spark.table(name)
-    return out.localCheckpoint(eager=True)
+    return snapshot_result(out, "qs9")
 
 
 def qs10_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -579,56 +580,60 @@ def qs10_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = read(spark, sf_dir, "embeddings")
+    base = tempfile.mkdtemp(prefix="qs10_")
     # The trained quantizer is fixed before the stream starts (the
     # standard streaming-ANN-ingest contract): codebook = vectors with
     # id < 16, coarse centroids = vectors with id < 8 — the same
     # deterministic "training" qx40 uses, so the oracle carries over.
-    cb = pq_codebook(emb).localCheckpoint(eager=True)
-    cents = _prep_cents(
+    # Both are pinned for the stream and the probe, then released.
+    cents_df = _prep_cents(
         emb.filter(F.col("vec_id") < 8).select(
             F.col("vec_id").cast("int").alias("centroid_id"),
             F.col("embedding").alias("c"),
         )
-    ).localCheckpoint(eager=True)
-    base = tempfile.mkdtemp(prefix="qs10_")
+    )
     try:
-        src = f"{base}/vecs"
-        _two_half_source(emb, F.col("vec_id") % 2 == 0, src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        index = f"{base}/index"
-        with _stream_shuffle_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(
-                    incremental_ivfpq_sink(index, cb, cents, dim=EMB_DIM)
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .start()
+        with pinned(pq_codebook(emb)) as cb, pinned(cents_df) as cents:
+            src = f"{base}/vecs"
+            _two_half_source(emb, F.col("vec_id") % 2 == 0, src)
+            schema = spark.read.parquet(src).schema
+            stream = (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
             )
-            q.awaitTermination()
-        # Probe-time coarse search: the query's cluster comes from its
-        # own index row (one-row lookup — the caller-computed probe
-        # set the probe contract requires).
-        qc = (
-            spark.read.parquet(index)
-            .filter(F.col("vec_id") == 42)
-            .select("cluster_id")
-            .head()[0]
-        )
-        query = emb.filter(F.col("vec_id") == 42).select(
-            F.col("embedding").alias("q")
-        )
-        # Eager checkpoint pins the result before the scratch dir is
-        # deleted (same pattern as qs4).
-        return probe_ivfpq_index(
-            spark, index, query, cb, [int(qc)],
-            k=5, shortlist_k=20, dim=EMB_DIM,
-        ).localCheckpoint(eager=True)
+            index = f"{base}/index"
+            with _stream_shuffle_partitions(spark):
+                q = (
+                    stream.writeStream.foreachBatch(
+                        incremental_ivfpq_sink(index, cb, cents, dim=EMB_DIM)
+                    )
+                    .trigger(availableNow=True)
+                    .option("checkpointLocation", f"{base}/ckpt")
+                    .start()
+                )
+                q.awaitTermination()
+            # Probe-time coarse search: the query's cluster comes from
+            # its own index row (one-row lookup — the caller-computed
+            # probe set the probe contract requires).
+            qc = (
+                spark.read.parquet(index)
+                .filter(F.col("vec_id") == 42)
+                .select("cluster_id")
+                .head()[0]
+            )
+            query = emb.filter(F.col("vec_id") == 42).select(
+                F.col("embedding").alias("q")
+            )
+            # The snapshot pins the result before the scratch dir is
+            # deleted and the quantizer released (same pattern as qs4).
+            return snapshot_result(
+                probe_ivfpq_index(
+                    spark, index, query, cb, [int(qc)],
+                    k=5, shortlist_k=20, dim=EMB_DIM,
+                ),
+                "qs10",
+            )
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -688,13 +693,13 @@ def qs11_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.awaitTermination()
         # Explicit schema (a fully-rejected corpus leaves no data
         # files); dropDuplicates tolerates at-least-once replays;
-        # eager checkpoint pins the frame before scratch cleanup.
-        return (
+        # the snapshot pins the frame before scratch cleanup.
+        return snapshot_result(
             spark.read.schema("doc_id long, quality double, epoch int")
             .parquet(out)
             .select("doc_id", "quality")
-            .dropDuplicates(["doc_id"])
-            .localCheckpoint(eager=True)
+            .dropDuplicates(["doc_id"]),
+            "qs11",
         )
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -757,8 +762,7 @@ def qs12_stream_budget_admission(
                 .start()
             )
             q.awaitTermination()
-            out = spark.table(name).localCheckpoint(eager=True)
-        return out
+            return snapshot_result(spark.table(name), "qs12")
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -841,10 +845,9 @@ def qs13_stream_dedup_survivors(
             .filter(F.col("doc_id") != F.col("cluster_rep"))
             .select("doc_id")
         )
-        return (
-            docs.join(drops, "doc_id", "left_anti")
-            .select("doc_id")
-            .localCheckpoint(eager=True)
+        return snapshot_result(
+            docs.join(drops, "doc_id", "left_anti").select("doc_id"),
+            "qs13",
         )
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -926,15 +929,15 @@ def qs14_stream_mixture_gate(
             q.awaitTermination()
         # Explicit schema (a fully-rejected corpus leaves no data
         # files); dropDuplicates tolerates at-least-once replays;
-        # eager checkpoint pins the frame before scratch cleanup.
-        return (
+        # the snapshot pins the frame before scratch cleanup.
+        return snapshot_result(
             spark.read.schema(
                 "doc_id long, source string, rate_ppm long, epoch int"
             )
             .parquet(out)
             .select("doc_id", "source", "rate_ppm")
-            .dropDuplicates(["doc_id"])
-            .localCheckpoint(eager=True)
+            .dropDuplicates(["doc_id"]),
+            "qs14",
         )
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1033,45 +1036,43 @@ def qs15_stream_preprocess_pipeline(
 
         def _pipe(batch_df: DataFrame, epoch_id: int) -> None:
             # gate → gate: one pure projection + one broadcast-join
-            # filter; persisted because two sinks consume it (the
+            # filter; pinned because two sinks consume it (the
             # curated epoch write and the dedup signature append).
-            gated = mixture_gate(
+            gated_df = mixture_gate(
                 batch_df.withColumn("quality", q_col).filter(
                     F.col("quality") >= QS15_QUALITY_BAR
                 ),
                 rates,
                 salt=QX60_SALT,
-            ).persist()
+            )
+            with pinned(gated_df) as gated:
 
-            def _curated_write() -> None:
-                (
-                    gated.select(
-                        "doc_id", "source", "quality", "rate_ppm"
+                def _curated_write() -> None:
+                    (
+                        gated.select(
+                            "doc_id", "source", "quality", "rate_ppm"
+                        )
+                        .withColumn("epoch", F.lit(int(epoch_id)))
+                        .repartition(1)
+                        .write.mode("overwrite")
+                        .option("partitionOverwriteMode", "dynamic")
+                        .partitionBy("epoch")
+                        .parquet(out)
                     )
-                    .withColumn("epoch", F.lit(int(epoch_id)))
-                    .repartition(1)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("epoch")
-                    .parquet(out)
-                )
 
-            try:
-                # The two sinks consume the SAME persisted frame and
-                # write to DISJOINT tables, so their jobs are
-                # independent — submit the curated epoch write from a
-                # driver thread so its tasks back-fill executors idled
-                # by the dedup chain's barriers (guide §2.6); join +
-                # re-raise before the batch commits, so replay
-                # semantics are exactly the sequential form's.
+                # The two sinks consume the SAME pinned frame and write
+                # to DISJOINT tables, so their jobs are independent —
+                # submit the curated epoch write from a driver thread
+                # so its tasks back-fill executors idled by the dedup
+                # chain's barriers (guide §2.6); join + re-raise before
+                # the batch commits, so replay semantics are exactly
+                # the sequential form's.
                 from concurrent.futures import ThreadPoolExecutor
 
                 with ThreadPoolExecutor(max_workers=1) as pool:
                     fut = pool.submit(_curated_write)
                     dedup(gated.select("doc_id", "text"), epoch_id)
                     fut.result()
-            finally:
-                gated.unpersist()
 
         src = f"{base}/docs"
 

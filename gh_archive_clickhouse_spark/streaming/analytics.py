@@ -113,75 +113,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-# ---- second-generation state API: transformWithStateInPandas ---------
-#
-# Spark 4's StatefulProcessor replaces the single-blob GroupState with
-# named, typed state variables on a RocksDB-backed store — the engine's
-# forward path for bespoke streaming operators (multiple state vars,
-# timers, TTL). Functionally equivalent running-totals operator to
-# `running_user_totals`, expressed in the new API.
-
-_TWS_OUTPUT_SCHEMA = "user_id long, n long, total double"
-
-
-class _RunningTotalsProcessor:
-    """StatefulProcessor: per-user (count, sum(value)) accumulator.
-
-    Defined lazily as a plain class with the StatefulProcessor protocol
-    (init/handleInputRows/close) so importing this module never needs a
-    live session; `transformWithStateInPandas` only duck-types it.
-    """
-
-    def init(self, handle) -> None:  # pragma: no cover - executor-side
-        self._state = handle.getValueState("totals", "n long, total double")
-
-    def handleInputRows(
-        self, key, rows, timerValues
-    ):  # pragma: no cover - executor-side
-        n, total = 0, 0.0
-        if self._state.exists():
-            n, total = self._state.get()
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._state.update((n, total))
-        yield pd.DataFrame({"user_id": [key[0]], "n": [n], "total": [total]})
-
-    def close(self) -> None:  # pragma: no cover - executor-side
-        pass
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """`running_user_totals` on the transformWithStateInPandas API.
-
-    Requires (a) the RocksDB state store provider (caller sets
-    ``spark.sql.streaming.stateStore.providerClass`` =
-    RocksDBStateStoreProvider — the provider the new API mandates) and
-    (b) a working ``google.protobuf`` install (the TWS driver worker
-    speaks protobuf to the JVM). The production path where both hold;
-    tests skip automatically where protobuf is absent (this container),
-    and `running_user_totals` (applyInPandasWithState) is the
-    env-independent equivalent.
-    """
-    from pyspark.sql.streaming import StatefulProcessor
-
-    proc = type(
-        "RunningTotalsProcessor",
-        (StatefulProcessor,),
-        dict(_RunningTotalsProcessor.__dict__),
-    )()
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=proc,
-            outputStructType=_TWS_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def view_purchase_attribution(
     events: DataFrame,
     attribution_window: str = "10 minutes",

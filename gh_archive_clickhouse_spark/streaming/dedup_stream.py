@@ -32,7 +32,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gh_archive_clickhouse_spark.checkpoints import release_checkpoint
+from gh_archive_clickhouse_spark.checkpoints import pinned
 from gh_archive_clickhouse_spark.operators.dedup import (
     lsh_candidate_pairs_between,
     minhash_signatures,
@@ -209,23 +209,20 @@ def _compact_old_epochs(
     else:
         n_files = max(1, -(-(major_b + minor_b) // target_file_bytes))
         folded = folded.repartition(int(n_files), *dedup_cols)
-    # Lineage-break checkpoint: the rewrite reads the very partition it
+    # Lineage-break pin: the rewrite reads the very partition it
     # overwrites, so the frame must be pinned first. The blocks are
     # dead the moment the overwrite commits (the next fold re-reads
-    # from disk) — release them NOW rather than once per fold for the
+    # from disk) — released on exit rather than once per fold for the
     # stream's lifetime until the ContextCleaner notices; on a failed
     # write they are equally dead (the replay recomputes the fold from
-    # the on-disk epochs), hence the finally.
-    folded = folded.localCheckpoint(eager=True)
-    try:
+    # the on-disk epochs).
+    with pinned(folded) as snap:
         (
-            folded.write.mode("overwrite")
+            snap.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_cols)
             .parquet(path)
         )
-    finally:
-        release_checkpoint(folded)
     # Crash-atomic manifest commit: write-to-temp + os.replace (atomic
     # on POSIX), so a crash mid-write can never leave a torn/partial
     # JSON behind — the manifest is either the old one (next major
@@ -286,10 +283,9 @@ def incremental_lsh_sink(
         # before the batch commits, so replay semantics are exactly
         # the sequential form's. localCheckpoint round-trips the long
         # arrays exactly (same blocks), so the pairs are identical.
-        sigs_new = minhash_signatures(
-            batch_df, shingle_k=shingle_k
-        ).localCheckpoint(eager=True)
-        try:
+        with pinned(
+            minhash_signatures(batch_df, shingle_k=shingle_k)
+        ) as sigs_new:
 
             def _sig_write() -> None:
                 (
@@ -334,8 +330,6 @@ def incremental_lsh_sink(
                     .parquet(pairs_path)
                 )
                 fut.result()
-        finally:
-            release_checkpoint(sigs_new)
         sig_fold = _compact_old_epochs(
             spark,
             sig_path,
@@ -395,20 +389,17 @@ def fold_cluster_labels(
         .distinct()
     )
     labels = connected_components(pairs)
-    # localCheckpoint before the overwrite: CC's lineage reads the
-    # pair log, and (unlike the epoch fold) labels_path is a separate
-    # table, so only the lineage-truncation half of the fold's
+    # Pinned before the overwrite: CC's lineage reads the pair log,
+    # and (unlike the epoch fold) labels_path is a separate table, so
+    # only the lineage-truncation half of the fold's
     # read-then-overwrite discipline is needed. Same storage
-    # lifecycle as the fold's checkpoint: the refresh runs once per
+    # lifecycle as the fold's pin: the refresh runs once per
     # major-fold cadence for the stream's lifetime, so its blocks are
     # released as soon as the overwrite commits (consumers read the
     # labels TABLE, never this frame); a failed write is recomputed
-    # from the pair log, so the finally is equally safe.
-    snap = labels.localCheckpoint(eager=True)
-    try:
+    # from the pair log.
+    with pinned(labels) as snap:
         snap.write.mode("overwrite").parquet(labels_path)
-    finally:
-        release_checkpoint(snap)
 
 
 def incremental_dedup_sink(

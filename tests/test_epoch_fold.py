@@ -295,7 +295,7 @@ def test_fold_cluster_labels_releases_its_snapshot(
     from gh_archive_clickhouse_spark.streaming import dedup_stream
 
     released = []
-    real = dedup_stream.release_checkpoint
+    real = checkpoints.release_checkpoint
 
     def _spy(df):
         rid = checkpoints.checkpoint_rdd_handle(df).id()
@@ -303,7 +303,7 @@ def test_fold_cluster_labels_releases_its_snapshot(
         released.append((rid, ok))
         return ok
 
-    monkeypatch.setattr(dedup_stream, "release_checkpoint", _spy)
+    monkeypatch.setattr(checkpoints, "release_checkpoint", _spy)
     pairs_path = str(tmp_path / "pairs")
     spark.createDataFrame(
         [(1, 2, 0), (2, 3, 0)], "doc_a long, doc_b long, epoch int"

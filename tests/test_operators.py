@@ -734,16 +734,6 @@ def test_snapshot_result_releases_previous_invocation(spark):
         lambda: len(a1_ids - cached_rdd_ids(spark)) == 1
     )
     assert a2.count() == 10 and b1.count() == 50
-    # the invalidation is recorded so an external caller's
-    # "checkpoint block not found" on the OLD frame can be traced to
-    # the re-invocation contract instead of a phantom executor loss
-    from gh_archive_clickhouse_spark.plans.common import (
-        RELEASED_RESULT_KEYS,
-    )
-
-    app = spark.sparkContext.applicationId
-    assert (app, "op_a") in RELEASED_RESULT_KEYS
-    assert (app, "op_b") not in RELEASED_RESULT_KEYS
 
 
 def test_release_checkpoint_frees_blocks(spark):
@@ -764,14 +754,15 @@ def test_release_checkpoint_frees_blocks(spark):
 def test_snapshot_result_registry_survives_handle_fetch_failure(
     spark, monkeypatch
 ):
-    """The registry update is atomic w.r.t. fetch failures (advisor
-    r10): a degraded invocation (handle unreachable) must NOT drop the
-    previous registration — otherwise release would be silently
-    disabled for that key for the session's lifetime (the warning
-    fires only once globally). The next healthy invocation still
-    releases the ORIGINAL frame."""
+    """A degraded invocation (checkpoint handle unreachable, so the
+    previous frame's release fails) must NOT drop the previous
+    registration — otherwise release would be silently disabled for
+    that key for the session's lifetime (the warning fires only once
+    globally). The next healthy invocation still releases the
+    ORIGINAL frame."""
     import warnings
 
+    from gh_archive_clickhouse_spark import checkpoints
     from gh_archive_clickhouse_spark.plans import common
     before = cached_rdd_ids(spark)
     a1 = common.snapshot_result(
@@ -781,7 +772,7 @@ def test_snapshot_result_registry_survives_handle_fetch_failure(
     assert len(a1_ids) == 1
 
     with monkeypatch.context() as m:
-        m.setattr(common, "checkpoint_rdd_handle", lambda df: None)
+        m.setattr(checkpoints, "checkpoint_rdd_handle", lambda df: None)
         with warnings.catch_warnings():
             warnings.simplefilter("ignore", RuntimeWarning)
             a2 = common.snapshot_result(
@@ -798,40 +789,62 @@ def test_snapshot_result_registry_survives_handle_fetch_failure(
     assert a3.count() == 10
 
 
-def test_snapshot_result_no_tombstone_when_release_fails(spark):
-    """A tombstone asserts "the old blocks WERE freed" (advisor r11):
-    when the previous handle's unpersist RAISES, the blocks are still
-    live, so recording the key in RELEASED_RESULT_KEYS would point a
-    later block-fetch diagnostic at a release that never happened.
-    The failed release must leave no tombstone; a subsequent healthy
-    re-invocation records it as usual."""
+def test_snapshot_result_retries_a_failed_release_once(
+    spark, monkeypatch
+):
+    """A predecessor whose release fails stays registered for exactly
+    one retry on the next invocation and is then dropped (left to the
+    ContextCleaner), so a key never holds more than two frames."""
+    from gh_archive_clickhouse_spark.checkpoints import (
+        checkpoint_rdd_handle,
+    )
     from gh_archive_clickhouse_spark.plans import common
 
-    class _Raising:
-        def unpersist(self, blocking):
-            raise RuntimeError("jvm unreachable")
+    stuck, tries = object(), []
+    real = common.release_checkpoint
 
+    def _release(df):
+        if df is stuck:
+            tries.append(df)
+            return False
+        return real(df)
+
+    monkeypatch.setattr(common, "release_checkpoint", _release)
     app = spark.sparkContext.applicationId
-    key = "op_tombstone"
-    common._RESULT_SNAPSHOTS[(app, key)] = _Raising()
-    common.RELEASED_RESULT_KEYS.discard((app, key))
+    key = "op_retry"
+    common._RESULT_SNAPSHOTS[(app, key)] = [stuck]
     a1 = common.snapshot_result(spark.range(5).selectExpr("id"), key)
-    assert (app, key) not in common.RELEASED_RESULT_KEYS
-    assert a1.count() == 5
-    # the healthy successor releases a1 and records it truthfully
+    held = common._RESULT_SNAPSHOTS[(app, key)]
+    assert len(held) == 2 and held[0] is a1 and held[1] is stuck
+    rid = checkpoint_rdd_handle(a1).id()
     a2 = common.snapshot_result(spark.range(3).selectExpr("id"), key)
-    assert (app, key) in common.RELEASED_RESULT_KEYS
+    held = common._RESULT_SNAPSHOTS[(app, key)]
+    assert len(held) == 1 and held[0] is a2
+    assert len(tries) == 2
+    assert wait_rdds_gone(spark, {rid})
     assert a2.count() == 3
-    # a LATER failed release must LEAVE the earlier generation's
-    # tombstone standing (second review pass): that release really
-    # ran, and a caller still holding that older frame — the only
-    # caller who can hit a block-fetch failure here, since the failed
-    # release leaves the newer generation's blocks live — is exactly
-    # who the trace exists for
-    common._RESULT_SNAPSHOTS[(app, key)] = _Raising()
-    a3 = common.snapshot_result(spark.range(2).selectExpr("id"), key)
-    assert (app, key) in common.RELEASED_RESULT_KEYS
-    assert a3.count() == 2
+
+
+@pytest.mark.parametrize(
+    "builder", ["qs9_stream_static_enrich", "qs11_stream_quality_gate"]
+)
+def test_streaming_builder_releases_previous_result(spark, builder):
+    """A resident session re-invoking a streaming builder holds one
+    result snapshot per query: the second invocation frees the first
+    result's blocks (qs9 reads a memory sink, qs11 a file sink)."""
+    from gh_archive_clickhouse_spark.checkpoints import (
+        checkpoint_rdd_handle,
+    )
+    from gh_archive_clickhouse_spark.plans import streaming_queries
+
+    build = getattr(streaming_queries, builder)
+    first = build(spark, SF_DIR)
+    rows = sorted(first.collect(), key=repr)
+    rid = checkpoint_rdd_handle(first).id()
+    assert rid in cached_rdd_ids(spark)
+    second = build(spark, SF_DIR)
+    assert sorted(second.collect(), key=repr) == rows
+    assert wait_rdds_gone(spark, {rid})
 
 
 def test_kmeans_fit_matches_numpy_reference(spark):

@@ -119,50 +119,6 @@ def test_autorotation_keeps_budget_with_no_manual_edits():
             )
 
 
-def test_r15_jaccard_landing_window_fits():
-    """The staged r15 landing (artifacts/r15_jaccard_verified.patch —
-    the LAST rounding-class batch) needs its 8 consumer pins to fit
-    the r15 window with zero staleness violations. This pins that
-    arithmetic NOW so a surprise elsewhere can't silently sink the
-    landing: simulate the r14 driver verifying the current committed
-    head, then compute the r15 head with the 8 jaccard pins and
-    assert every query still meets the budget. If registry growth or
-    a changed-list rewrite breaks this, the failure message says
-    which landing it endangers."""
-    from gh_archive_clickhouse_spark.plans.registry import compute_head
-
-    jaccard_pins = (
-        "qx9_lsh_candidates",
-        "qx20_chargram_jaccard",
-        "qx26_dedup_clusters",
-        "qx31_dedup_survivors",
-        "qx42_preprocess_pipeline",
-        "qx43_lsh_recall_probe",
-        "qx56_quality_dedup_cut",
-        "qx57_split_leakage_cut",
-    )
-    rounds = _recorded_rounds()
-    assert rounds
-    freshest: dict[str, int] = {}
-    for r in sorted(rounds):
-        for n in rounds[r]:
-            freshest[n] = r
-    cur = max(rounds)
-    # the r14 driver verifies the committed head as-is
-    for n in list(QUERIES)[:WINDOW]:
-        freshest[n] = cur + 1
-    head15 = compute_head(jaccard_pins, freshest)
-    for n in head15:
-        freshest[n] = cur + 2
-    floor = cur + 2 - MAX_STALE
-    late = sorted(n for n in QUERIES if freshest.get(n, 0) < floor)
-    assert not late, (
-        f"the r15 jaccard landing (8 pins) no longer fits the window "
-        f"without staleness violations — re-derive the split (value "
-        f"first, thresholds next) before landing: {late}"
-    )
-
-
 def test_changed_pins_expire_once_driver_verifies_them():
     """A _CHANGED pin exists because recorded rows predate the code
     change; it must expire per query as soon as a row from
