@@ -609,6 +609,8 @@ def connected_components(
     """
     from gh_archive_clickhouse_spark.plans.common import materialize
 
+    if max_iters < 1:
+        raise ValueError("max_iters must be >= 1")
     # Symmetrize via a row-local explode, NOT fwd.union(swap(fwd)):
     # the union's two branches each re-execute the whole pair lineage
     # (Spark plans them independently — no ReusedExchange fires, so an
@@ -631,8 +633,6 @@ def connected_components(
         ).select("__e.src", "__e.dst"),
         "cc_edges",
     )
-    if max_iters < 1:
-        raise ValueError("max_iters must be >= 1")
     labels = None
     converged = False
     for _i in range(max_iters):
@@ -705,14 +705,11 @@ def connected_components(
         # round 0 always changes something when any edge exists): no
         # row changed certifies a propagation fixed point (any
         # neighbor min below a node's label would have decreased it).
-        if _i > 0:
-            changed = (
-                new_labels.filter(F.col("__chg")).limit(1).count()
-            )
-            if changed == 0:
-                labels = new_labels.select("node", "label")
-                converged = True
-                break
+        changed = new_labels.filter(F.col("__chg")).limit(1).count()
+        if changed == 0:
+            labels = new_labels.select("node", "label")
+            converged = True
+            break
         labels = new_labels.select("node", "label")
     if not converged:
         # Loop exhausted without a certified fixed point (or max_iters

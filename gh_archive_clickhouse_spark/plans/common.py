@@ -382,7 +382,16 @@ def read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    return normalize_timestamps(
+        spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    )
+
+
+def normalize_timestamps(df: DataFrame) -> DataFrame:
+    """Turn a fixture frame's raw temporal columns into TIMESTAMP (batch
+    or stream alike): a nanosecond ``ts`` read as long (the
+    ``nanosAsLong`` reader conf) is floor-divided to microseconds, and
+    every TIMESTAMP_NTZ column is reinterpreted as a UTC instant."""
     for f_ in df.schema.fields:
         if f_.name == "ts" and f_.dataType.simpleString() == "bigint":
             df = df.withColumn(

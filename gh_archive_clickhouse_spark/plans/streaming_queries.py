@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import contextlib
 import itertools
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,6 +29,7 @@ from pyspark.sql import functions as F
 from gh_archive_clickhouse_spark.checkpoints import pinned
 from gh_archive_clickhouse_spark.plans.common import (
     Query,
+    normalize_timestamps,
     read,
     snapshot_result,
     ts_fmt,
@@ -129,7 +132,6 @@ def _two_half_source(df: DataFrame, first_half, src: str) -> None:
     """
     import glob
     import os
-    import shutil
     import time
 
     staging = f"{src}__stage"
@@ -162,27 +164,62 @@ def _events_stream(spark: SparkSession, sf_dir: str):
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     # FileStreamSource wants a directory; a glob over the fixture dir
     # keeps the base path a directory while selecting the one file.
-    stream = spark.readStream.schema(raw_schema).parquet(
-        f"{sf_dir}/events*.parquet"
-    )
-    ts_dtype = dict(stream.dtypes).get("ts")
-    if ts_dtype == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
+    return normalize_timestamps(
+        spark.readStream.schema(raw_schema).parquet(
+            f"{sf_dir}/events*.parquet"
         )
-    elif ts_dtype == "timestamp_ntz":
-        # tz-less fixture parquet: reinterpret as UTC instant so the
-        # watermark (which requires TIMESTAMP) accepts it.
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    )
 
 
-def _run_to_table(agg, prefix: str):
+@contextlib.contextmanager
+def _scratch(prefix: str):
+    """A fresh scratch directory for one builder run, removed on exit
+    (results are pinned with ``snapshot_result`` before it goes)."""
+    base = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield base
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def _file_stream(spark: SparkSession, src: str) -> DataFrame:
+    """The parquet files under ``src`` as a stream, one file per
+    micro-batch (FileStreamSource takes them in mtime order)."""
+    schema = spark.read.parquet(src).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
+def _run_two_half(
+    spark: SparkSession, df: DataFrame, first_half, base: str, src: str, sink
+) -> None:
+    """Stream ``df`` as two micro-batches through the foreachBatch
+    ``sink`` to completion: the ``_two_half_source`` layout under
+    ``base/src``, an availableNow trigger, the checkpoint under
+    ``base/ckpt``, right-sized shuffle partitions."""
+    _two_half_source(df, first_half, f"{base}/{src}")
+    stream = _file_stream(spark, f"{base}/{src}")
+    with _stream_shuffle_partitions(spark):
+        (
+            stream.writeStream.foreachBatch(sink)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", f"{base}/ckpt")
+            .start()
+            .awaitTermination()
+        )
+
+
+def _run_to_table(agg, prefix: str, mode: str = "complete"):
+    """Run ``agg`` to completion into a fresh memory-sink table (output
+    ``mode``, availableNow trigger) and return that table."""
     name = f"{prefix}_{next(_SEQ)}"
     q = (
         agg.writeStream.format("memory")
         .queryName(name)
-        .outputMode("complete")
+        .outputMode(mode)
         .trigger(availableNow=True)
         .start()
     )
@@ -228,16 +265,7 @@ def qs3_stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink holds exactly the final state row per user."""
     with _stream_shuffle_partitions(spark):
         agg = running_user_totals(_events_stream(spark, sf_dir))
-        name = f"qs3_totals_{next(_SEQ)}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.table(name)
+        out = _run_to_table(agg, "qs3_totals", "update")
     return out.select(
         "user_id", "n", F.round(F.col("total"), 6).alias("total_r")
     )
@@ -280,41 +308,20 @@ def qs4_stream_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/dedup_stream.py). The unioned per-batch pair log must
     equal the BATCH operator's pair set — which is exactly what the
     oracle (the qx9 banding SQL) asserts."""
-    import shutil
-    import tempfile
-
-    from gh_archive_clickhouse_spark.plans.common import read
     from gh_archive_clickhouse_spark.streaming.dedup_stream import (
         PAIRS_SCHEMA,
         incremental_lsh_sink,
     )
 
     docs = read(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="qs4_")
-    try:
-        src = f"{base}/docs"
-        _two_half_source(docs, F.col("doc_id") % 2 == 0, src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    with _scratch("qs4_") as base:
+        _run_two_half(
+            spark, docs, F.col("doc_id") % 2 == 0, base, "docs",
+            incremental_lsh_sink(f"{base}/sigs", f"{base}/pairs"),
         )
-        with _stream_shuffle_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(
-                    incremental_lsh_sink(f"{base}/sigs", f"{base}/pairs")
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .start()
-            )
-            q.awaitTermination()
         # Explicit schema: a zero-candidate corpus leaves the pairs log
         # with no data files, where schema inference would throw; the
-        # read then yields the correct EMPTY frame. The snapshot pins
-        # the result in the block manager so the scratch dir can be
-        # deleted before the caller consumes the frame.
+        # read then yields the correct EMPTY frame.
         return snapshot_result(
             spark.read.schema(PAIRS_SCHEMA)
             .parquet(f"{base}/pairs")
@@ -322,8 +329,6 @@ def qs4_stream_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct(),
             "qs4",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def qs5_stream_sliding_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -356,16 +361,7 @@ def qs6_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with _stream_shuffle_partitions(spark):
         joined = view_purchase_attribution(_events_stream(spark, sf_dir))
-        name = f"qs6_attrib_{next(_SEQ)}"
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.table(name)
+        out = _run_to_table(joined, "qs6_attrib", "append")
     return out.select(
         "purchase_id",
         "view_id",
@@ -396,44 +392,20 @@ def qs7_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     readable view folds the partials. The fold is order-independent
     (count/min/max), so the maintained view must equal the one-shot
     batch rollup — which is the oracle."""
-    import shutil
-    import tempfile
-
-    from gh_archive_clickhouse_spark.plans.common import read
     from gh_archive_clickhouse_spark.streaming.mv import (
         incremental_rollup_sink,
         rollup_view,
     )
 
     ev = read(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="qs7_")
-    try:
-        src = f"{base}/events"
-        _two_half_source(ev, F.col("event_id") % 2 == 0, src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    with _scratch("qs7_") as base:
+        _run_two_half(
+            spark, ev, F.col("event_id") % 2 == 0, base, "events",
+            incremental_rollup_sink(f"{base}/partials"),
         )
-        ts_dtype = dict(stream.dtypes).get("ts")
-        if ts_dtype == "timestamp_ntz":
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        with _stream_shuffle_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(
-                    incremental_rollup_sink(f"{base}/partials")
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .start()
-            )
-            q.awaitTermination()
         return snapshot_result(
             rollup_view(spark, f"{base}/partials"), "qs7"
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def qs8_stream_exactly_once_dedup(
@@ -448,14 +420,9 @@ def qs8_stream_exactly_once_dedup(
     holds every event EXACTLY ONCE — the oracle is simply the events
     table."""
     import os
-    import shutil
-    import tempfile
-
-    from gh_archive_clickhouse_spark.plans.common import read
 
     ev = read(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="qs8_")
-    try:
+    with _scratch("qs8_") as base:
         src = f"{base}/events"
         ev.coalesce(1).write.mode("append").parquet(src)
         # The replay batch is BY DEFINITION byte-identical input — copy
@@ -470,36 +437,17 @@ def qs8_stream_exactly_once_dedup(
         shutil.copyfile(
             f"{src}/{part}", f"{src}/{part[:-8]}-replay.parquet"
         )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        deduped = stream.withWatermark(
+        deduped = _file_stream(spark, src).withWatermark(
             "ts", "10 minutes"
         ).dropDuplicatesWithinWatermark(["event_id"])
         with _stream_shuffle_partitions(spark):
-            name = f"qs8_dedup_{next(_SEQ)}"
-            q = (
-                deduped.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            out = spark.table(name).select(
+            out = _run_to_table(deduped, "qs8_dedup", "append").select(
                 "event_id",
                 ts_fmt("ts").alias("ts_s"),
                 "user_id",
                 "event_type",
             )
-        return snapshot_result(out, "qs8")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+            return snapshot_result(out, "qs8")
 
 
 _ORACLE_QS8 = """
@@ -519,8 +467,6 @@ def qs9_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     key domain is BOUNDED (event_type x bool — a handful of rows of
     state forever); an unbounded-key aggregation would need the
     watermarked form (qs1)."""
-    from gh_archive_clickhouse_spark.plans.common import read
-
     ev = read(spark, sf_dir, "events")
     cohorts = (
         ev.filter(F.col("event_type") == "signup")
@@ -542,16 +488,7 @@ def qs9_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = enriched.groupBy("event_type", "signed_up").agg(
             F.count(F.lit(1)).alias("n")
         )
-        name = f"qs9_enrich_{next(_SEQ)}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.table(name)
+        out = _run_to_table(agg, "qs9_enrich")
     return snapshot_result(out, "qs9")
 
 
@@ -566,9 +503,6 @@ def qs10_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what the oracle (qx40's IVF-PQ search SQL) asserts:
     query = vec 42, its coarse cell, ADC top-20 shortlist, exact
     cosine top-5 re-rank."""
-    import shutil
-    import tempfile
-
     from gh_archive_clickhouse_spark.operators.similarity import (
         _prep_cents,
         pq_codebook,
@@ -580,7 +514,6 @@ def qs10_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = read(spark, sf_dir, "embeddings")
-    base = tempfile.mkdtemp(prefix="qs10_")
     # The trained quantizer is fixed before the stream starts (the
     # standard streaming-ANN-ingest contract): codebook = vectors with
     # id < 16, coarse centroids = vectors with id < 8 — the same
@@ -592,50 +525,35 @@ def qs10_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("c"),
         )
     )
-    try:
-        with pinned(pq_codebook(emb)) as cb, pinned(cents_df) as cents:
-            src = f"{base}/vecs"
-            _two_half_source(emb, F.col("vec_id") % 2 == 0, src)
-            schema = spark.read.parquet(src).schema
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            index = f"{base}/index"
-            with _stream_shuffle_partitions(spark):
-                q = (
-                    stream.writeStream.foreachBatch(
-                        incremental_ivfpq_sink(index, cb, cents, dim=EMB_DIM)
-                    )
-                    .trigger(availableNow=True)
-                    .option("checkpointLocation", f"{base}/ckpt")
-                    .start()
-                )
-                q.awaitTermination()
-            # Probe-time coarse search: the query's cluster comes from
-            # its own index row (one-row lookup — the caller-computed
-            # probe set the probe contract requires).
-            qc = (
-                spark.read.parquet(index)
-                .filter(F.col("vec_id") == 42)
-                .select("cluster_id")
-                .head()[0]
-            )
-            query = emb.filter(F.col("vec_id") == 42).select(
-                F.col("embedding").alias("q")
-            )
-            # The snapshot pins the result before the scratch dir is
-            # deleted and the quantizer released (same pattern as qs4).
-            return snapshot_result(
-                probe_ivfpq_index(
-                    spark, index, query, cb, [int(qc)],
-                    k=5, shortlist_k=20, dim=EMB_DIM,
-                ),
-                "qs10",
-            )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    with _scratch("qs10_") as base, pinned(
+        pq_codebook(emb)
+    ) as cb, pinned(cents_df) as cents:
+        index = f"{base}/index"
+        _run_two_half(
+            spark, emb, F.col("vec_id") % 2 == 0, base, "vecs",
+            incremental_ivfpq_sink(index, cb, cents, dim=EMB_DIM),
+        )
+        # Probe-time coarse search: the query's cluster comes from
+        # its own index row (one-row lookup — the caller-computed
+        # probe set the probe contract requires).
+        qc = (
+            spark.read.parquet(index)
+            .filter(F.col("vec_id") == 42)
+            .select("cluster_id")
+            .head()[0]
+        )
+        query = emb.filter(F.col("vec_id") == 42).select(
+            F.col("embedding").alias("q")
+        )
+        # The snapshot pins the result before the quantizer is
+        # released and the scratch dir deleted.
+        return snapshot_result(
+            probe_ivfpq_index(
+                spark, index, query, cb, [int(qc)],
+                k=5, shortlist_k=20, dim=EMB_DIM,
+            ),
+            "qs10",
+        )
 
 
 def qs11_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -650,47 +568,30 @@ def qs11_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch work is a pure map stage: at firehose scale this is the
     cheapest possible gate placement, dropping rejects before they are
     ever stored."""
-    import shutil
-    import tempfile
-
     from gh_archive_clickhouse_spark.operators.text_analysis import (
         quality_score,
     )
+    from gh_archive_clickhouse_spark.streaming.dedup_stream import (
+        write_epoch,
+    )
 
     docs = read(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="qs11_")
-    out = f"{base}/curated"
+    with _scratch("qs11_") as base:
+        out = f"{base}/curated"
 
-    def _gate(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            quality_score(batch_df)
-            .filter(F.col("quality") >= 0.75)
-            .select("doc_id", "quality")
-            .withColumn("epoch", F.lit(int(epoch_id)))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(out)
-        )
-
-    try:
-        src = f"{base}/docs"
-        _two_half_source(docs, F.col("doc_id") % 2 == 0, src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        with _stream_shuffle_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(_gate)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .start()
+        def _gate(batch_df: DataFrame, epoch_id: int) -> None:
+            write_epoch(
+                quality_score(batch_df)
+                .filter(F.col("quality") >= 0.75)
+                .select("doc_id", "quality")
+                .repartition(1),
+                out,
+                epoch_id,
             )
-            q.awaitTermination()
+
+        _run_two_half(
+            spark, docs, F.col("doc_id") % 2 == 0, base, "docs", _gate
+        )
         # Explicit schema (a fully-rejected corpus leaves no data
         # files); dropDuplicates tolerates at-least-once replays;
         # the snapshot pins the frame before scratch cleanup.
@@ -701,8 +602,6 @@ def qs11_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .dropDuplicates(["doc_id"]),
             "qs11",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 ADMISSION_BUDGET = 1_000
@@ -726,9 +625,6 @@ def qs12_stream_budget_admission(
     sequence — deterministic. Arrival order is then plain doc_id
     order per source, which is exactly the running sum the oracle
     evaluates."""
-    import shutil
-    import tempfile
-
     from gh_archive_clickhouse_spark.streaming.analytics import (
         token_budget_admission,
     )
@@ -737,34 +633,20 @@ def qs12_stream_budget_admission(
     mid = docs.agg(
         F.percentile_approx("doc_id", 0.5, 10000)
     ).first()[0]
-    base = tempfile.mkdtemp(prefix="qs12_")
-    try:
-        src = f"{base}/docs"
-
+    with _scratch("qs12_") as base:
         # _two_half_source pins the mtimes, so the file-stream's
         # modification-time ordering matches the doc_id-range split
         # regardless of write timing.
+        src = f"{base}/docs"
         _two_half_source(docs, F.col("doc_id") < mid, src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        stream = _file_stream(spark, src)
         with _stream_shuffle_partitions(spark):
-            name = f"qs12_admitted_{next(_SEQ)}"
-            q = (
-                token_budget_admission(stream, ADMISSION_BUDGET)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
+            out = _run_to_table(
+                token_budget_admission(stream, ADMISSION_BUDGET),
+                "qs12_admitted",
+                "append",
             )
-            q.awaitTermination()
-            return snapshot_result(spark.table(name), "qs12")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+            return snapshot_result(out, "qs12")
 
 
 _ORACLE_QS9 = """
@@ -802,10 +684,6 @@ def qs13_stream_dedup_survivors(
     connected components over the qs4 banding SQL, anti-joined
     against documents) asserts: the qs4 union-of-batches equivalence,
     one level up."""
-    import shutil
-    import tempfile
-
-    from gh_archive_clickhouse_spark.plans.common import read
     from gh_archive_clickhouse_spark.streaming.dedup_stream import (
         LABELS_SCHEMA,
         fold_cluster_labels,
@@ -813,29 +691,15 @@ def qs13_stream_dedup_survivors(
     )
 
     docs = read(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="qs13_")
-    try:
-        src = f"{base}/docs"
-        _two_half_source(docs, F.col("doc_id") % 2 == 0, src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    with _scratch("qs13_") as base:
         pairs_path, labels_path = f"{base}/pairs", f"{base}/labels"
         with _stream_shuffle_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(
-                    incremental_dedup_sink(
-                        f"{base}/sigs", pairs_path, labels_path
-                    )
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .start()
+            _run_two_half(
+                spark, docs, F.col("doc_id") % 2 == 0, base, "docs",
+                incremental_dedup_sink(
+                    f"{base}/sigs", pairs_path, labels_path
+                ),
             )
-            q.awaitTermination()
             # Close the books: a 2-batch run never reaches the major
             # fold, so this is the on-demand exact refresh.
             fold_cluster_labels(spark, pairs_path, labels_path)
@@ -849,8 +713,6 @@ def qs13_stream_dedup_survivors(
             docs.join(drops, "doc_id", "left_anti").select("doc_id"),
             "qs13",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def qs14_stream_mixture_gate(
@@ -868,9 +730,6 @@ def qs14_stream_mixture_gate(
     membership — the gated stream's read-back must equal the batch
     qx60 resample over the same corpus, which is exactly what the
     oracle (the qx60 kept-CTE at doc granularity) asserts."""
-    import shutil
-    import tempfile
-
     from gh_archive_clickhouse_spark.operators.packing import (
         mixture_gate,
         mixture_rates_from_counts,
@@ -879,11 +738,13 @@ def qs14_stream_mixture_gate(
     from gh_archive_clickhouse_spark.plans.ext_queries import (
         _ranked_weight_rows,
     )
+    from gh_archive_clickhouse_spark.streaming.dedup_stream import (
+        write_epoch,
+    )
 
     docs = read(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="qs14_")
-    out = f"{base}/mixed"
-    try:
+    with _scratch("qs14_") as base:
+        out = f"{base}/mixed"
         # The snapshot batch job: ONE per-source-count aggregate of
         # the corpus feeds both qx60's rank-derived non-uniform spec
         # (driver-built O(sources) literal over the observed sources
@@ -900,33 +761,17 @@ def qs14_stream_mixture_gate(
         rates = spark.read.parquet(rates_path)
 
         def _gate(batch_df: DataFrame, epoch_id: int) -> None:
-            (
+            write_epoch(
                 mixture_gate(batch_df, rates, salt=QX60_SALT)
                 .select("doc_id", "source", "rate_ppm")
-                .withColumn("epoch", F.lit(int(epoch_id)))
-                .repartition(1)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch")
-                .parquet(out)
+                .repartition(1),
+                out,
+                epoch_id,
             )
 
-        src = f"{base}/docs"
-        _two_half_source(docs, F.col("doc_id") % 2 == 0, src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        _run_two_half(
+            spark, docs, F.col("doc_id") % 2 == 0, base, "docs", _gate
         )
-        with _stream_shuffle_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(_gate)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .start()
-            )
-            q.awaitTermination()
         # Explicit schema (a fully-rejected corpus leaves no data
         # files); dropDuplicates tolerates at-least-once replays;
         # the snapshot pins the frame before scratch cleanup.
@@ -939,8 +784,6 @@ def qs14_stream_mixture_gate(
             .dropDuplicates(["doc_id"]),
             "qs14",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 QS15_QUALITY_BAR = 0.75
@@ -980,9 +823,6 @@ def qs15_stream_preprocess_pipeline(
     (qx5's score SQL → the qx60 rate CTEs over the curated set → the
     qs4 banding SQL over the mixed set → recursive-CTE CC →
     anti-join) asserts, hash-verified."""
-    import shutil
-    import tempfile
-
     from gh_archive_clickhouse_spark.operators.packing import (
         mixture_gate,
         mixture_rates_from_counts,
@@ -998,13 +838,13 @@ def qs15_stream_preprocess_pipeline(
         LABELS_SCHEMA,
         fold_cluster_labels,
         incremental_dedup_sink,
+        write_epoch,
     )
 
     docs = read(spark, sf_dir, "documents")
     q_col = quality_features()["quality"]
-    base = tempfile.mkdtemp(prefix="qs15_")
-    out = f"{base}/curated"
-    try:
+    with _scratch("qs15_") as base:
+        out = f"{base}/curated"
         # 1. the snapshot batch job: spec + rates over the curated
         # snapshot, persisted for the stream (rates must come from a
         # snapshot, not per-batch counts — per-batch rates would make
@@ -1037,7 +877,8 @@ def qs15_stream_preprocess_pipeline(
         def _pipe(batch_df: DataFrame, epoch_id: int) -> None:
             # gate → gate: one pure projection + one broadcast-join
             # filter; pinned because two sinks consume it (the
-            # curated epoch write and the dedup signature append).
+            # curated epoch write and the dedup signature append),
+            # which run one after the other on the stream's thread.
             gated_df = mixture_gate(
                 batch_df.withColumn("quality", q_col).filter(
                     F.col("quality") >= QS15_QUALITY_BAR
@@ -1046,35 +887,14 @@ def qs15_stream_preprocess_pipeline(
                 salt=QX60_SALT,
             )
             with pinned(gated_df) as gated:
-
-                def _curated_write() -> None:
-                    (
-                        gated.select(
-                            "doc_id", "source", "quality", "rate_ppm"
-                        )
-                        .withColumn("epoch", F.lit(int(epoch_id)))
-                        .repartition(1)
-                        .write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("epoch")
-                        .parquet(out)
-                    )
-
-                # The two sinks consume the SAME pinned frame and write
-                # to DISJOINT tables, so their jobs are independent —
-                # submit the curated epoch write from a driver thread
-                # so its tasks back-fill executors idled by the dedup
-                # chain's barriers (guide §2.6); join + re-raise before
-                # the batch commits, so replay semantics are exactly
-                # the sequential form's.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=1) as pool:
-                    fut = pool.submit(_curated_write)
-                    dedup(gated.select("doc_id", "text"), epoch_id)
-                    fut.result()
-
-        src = f"{base}/docs"
+                write_epoch(
+                    gated.select(
+                        "doc_id", "source", "quality", "rate_ppm"
+                    ).repartition(1),
+                    out,
+                    epoch_id,
+                )
+                dedup(gated.select("doc_id", "text"), epoch_id)
 
         # _two_half_source pins the mtimes (even half backdated), so
         # which half becomes epoch 0 vs 1 is fixed by construction.
@@ -1082,21 +902,10 @@ def qs15_stream_preprocess_pipeline(
         # per-row functions and the pair-log union is
         # order-independent), but the epoch partition LAYOUT should
         # not vary run to run.
-        _two_half_source(docs, F.col("doc_id") % 2 == 0, src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
         with _stream_shuffle_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(_pipe)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", f"{base}/ckpt")
-                .start()
+            _run_two_half(
+                spark, docs, F.col("doc_id") % 2 == 0, base, "docs", _pipe
             )
-            q.awaitTermination()
             # close the books: exact labels over the full pair log
             fold_cluster_labels(
                 spark, f"{base}/pairs", f"{base}/labels"
@@ -1118,8 +927,6 @@ def qs15_stream_preprocess_pipeline(
             .join(drops, "doc_id", "left_anti"),
             "qs15",
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # The composed stream's read-back == the batch curation prefix:

@@ -217,12 +217,7 @@ def _compact_old_epochs(
     # write they are equally dead (the replay recomputes the fold from
     # the on-disk epochs).
     with pinned(folded) as snap:
-        (
-            snap.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
+        write_epoch(snap, path, COMPACTED_EPOCH, *partition_cols[1:])
     # Crash-atomic manifest commit: write-to-temp + os.replace (atomic
     # on POSIX), so a crash mid-write can never leave a torn/partial
     # JSON behind — the manifest is either the old one (next major
@@ -241,6 +236,24 @@ def _compact_old_epochs(
     )
     os.replace(tmp, manifest)
     return "major"
+
+
+def write_epoch(
+    df: DataFrame, path: str, epoch_id: int, *sub_partitions: str
+) -> None:
+    """Write ``df`` as the ``epoch=epoch_id`` partition of the table at
+    ``path`` (under any ``sub_partitions`` dirs), replacing only that
+    partition: DYNAMIC partition overwrite, so a foreachBatch replay
+    rewrites its own epoch instead of appending duplicates and every
+    other epoch is untouched. Callers choose the file layout with their
+    own ``repartition``."""
+    (
+        df.withColumn("epoch", F.lit(int(epoch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch", *sub_partitions)
+        .parquet(path)
+    )
 
 
 def incremental_lsh_sink(
@@ -267,42 +280,24 @@ def incremental_lsh_sink(
     """
 
     def _write(batch_df: DataFrame, epoch_id: int) -> dict:
-        from concurrent.futures import ThreadPoolExecutor
-
         spark = batch_df.sparkSession
         # ONE signature build per batch, pinned in the block manager:
-        # both per-batch sinks (the epoch write and the pair join's
-        # probe side) consume this checkpoint, so the minhash pipeline
-        # (shingle explode + 16-way hash aggregate) runs exactly once
-        # — the same guarantee the r15 write-then-read-back form gave,
-        # without serializing the pair discovery behind the epoch
-        # write: the two downstream jobs touch DISJOINT outputs (the
-        # signature table's epoch partition vs the pair log), so the
-        # write submits from a driver thread and back-fills executors
-        # while the bucket join runs (guide §2.6); joined + re-raised
-        # before the batch commits, so replay semantics are exactly
-        # the sequential form's. localCheckpoint round-trips the long
-        # arrays exactly (same blocks), so the pairs are identical.
+        # both consumers (the epoch write and the pair join's probe
+        # side) read this checkpoint, so the minhash pipeline (shingle
+        # explode + 16-way hash aggregate) runs exactly once. Both
+        # writes run on the calling (stream) thread, so every job of
+        # the batch is in the query's job group and ``query.stop()``
+        # can cancel it. localCheckpoint round-trips the long arrays
+        # exactly (same blocks), so the pairs are identical.
         with pinned(
             minhash_signatures(batch_df, shingle_k=shingle_k)
         ) as sigs_new:
-
-            def _sig_write() -> None:
-                (
-                    sigs_new.withColumn("epoch", F.lit(int(epoch_id)))
-                    .repartition(4)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("epoch")
-                    .parquet(sig_path)
-                )
-
             # The probe side unions the PRIOR epochs from disk with
-            # the new checkpoint — equal to the old "whole table
-            # including the just-written epoch E" read: each doc
-            # lives in exactly one epoch, and on a replay the
-            # epoch != E filter excludes E's stale partition exactly
-            # as the dynamic overwrite used to replace it.
+            # the new checkpoint — equal to a "whole table including
+            # the just-written epoch E" read: each doc lives in
+            # exactly one epoch, and on a replay the epoch != E filter
+            # excludes E's stale partition exactly as the dynamic
+            # overwrite replaces it.
             if os.path.exists(sig_path):
                 old_sigs = (
                     spark.read.schema(SIGS_SCHEMA)
@@ -319,17 +314,8 @@ def incremental_lsh_sink(
                 bands=bands,
                 rows_per_band=rows_per_band,
             )
-            with ThreadPoolExecutor(max_workers=1) as pool:
-                fut = pool.submit(_sig_write)
-                (
-                    pairs.withColumn("epoch", F.lit(int(epoch_id)))
-                    .repartition(1)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("epoch")
-                    .parquet(pairs_path)
-                )
-                fut.result()
+            write_epoch(sigs_new.repartition(4), sig_path, epoch_id)
+            write_epoch(pairs.repartition(1), pairs_path, epoch_id)
         sig_fold = _compact_old_epochs(
             spark,
             sig_path,

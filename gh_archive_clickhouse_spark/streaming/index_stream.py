@@ -41,6 +41,7 @@ from gh_archive_clickhouse_spark.operators.similarity import (
 )
 from gh_archive_clickhouse_spark.streaming.dedup_stream import (
     _compact_old_epochs,
+    write_epoch,
 )
 
 INDEX_SCHEMA = (
@@ -97,13 +98,8 @@ def incremental_ivfpq_sink(
             batch_df, codebook, cents, m=m, dim=dim,
             id_col=id_col, vec_col=vec_col,
         )
-        (
-            rows.withColumn("epoch", F.lit(int(epoch_id)))
-            .repartition("cluster_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch", "cluster_id")
-            .parquet(index_path)
+        write_epoch(
+            rows.repartition("cluster_id"), index_path, epoch_id, "cluster_id"
         )
         _compact_old_epochs(
             spark,

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from gh_archive_clickhouse_spark.streaming.dedup_stream import (
     _compact_old_epochs,
+    write_epoch,
 )
 
 PARTIALS_SCHEMA = (
@@ -59,15 +60,8 @@ def incremental_rollup_sink(partials_path: str, keep_epochs: int = 4):
                 F.max("event_id").alias("max_eid"),
             )
             .withColumn("src_epoch", F.lit(int(epoch_id)))
-            .withColumn("epoch", F.lit(int(epoch_id)))
-            .repartition(1)
         )
-        (
-            partial.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(partials_path)
-        )
+        write_epoch(partial.repartition(1), partials_path, epoch_id)
         _compact_old_epochs(
             spark,
             partials_path,

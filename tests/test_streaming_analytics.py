@@ -218,11 +218,12 @@ def test_incremental_lsh_sink_replay_idempotent(spark, tmp_path):
 def test_incremental_lsh_sink_computes_signatures_once(
     spark, tmp_path, monkeypatch
 ):
-    """The per-batch signature build runs ONCE: the pair join's probe
-    side is the just-written epoch partition read back from disk, not
-    the live ``minhash_signatures`` frame (whose lineage would re-run
-    the shingle explode + hash aggregate a second time — Spark plans
-    each consumer of an unmaterialized frame independently)."""
+    """The per-batch signature build runs ONCE: the epoch write and
+    the pair join's probe side both read one pinned checkpoint of the
+    batch's signatures, not the live ``minhash_signatures`` frame
+    (whose lineage would re-run the shingle explode + hash aggregate a
+    second time — Spark plans each consumer of an unmaterialized frame
+    independently)."""
     import gh_archive_clickhouse_spark.streaming.dedup_stream as ds
 
     calls = []
@@ -239,7 +240,7 @@ def test_incremental_lsh_sink_computes_signatures_once(
     )
     sink(docs, epoch_id=0)
     assert len(calls) == 1
-    # and the read-back probe side still finds the within-batch pairs
+    # and the pinned probe side still finds the within-batch pairs
     from gh_archive_clickhouse_spark.operators.dedup import (
         lsh_candidate_pairs,
     )
@@ -255,6 +256,57 @@ def test_incremental_lsh_sink_computes_signatures_once(
         .collect()
     }
     assert got == expect
+
+
+def test_incremental_lsh_sink_jobs_stay_in_query_job_group(
+    spark, tmp_path
+):
+    """Every job a 2-batch ``incremental_lsh_sink`` stream starts runs on
+    the query's own thread, so it carries the query's job group (the
+    run id) and ``query.stop()`` can cancel it. A write submitted from
+    a driver thread pool would run outside the group. Jobs are read
+    from Spark's status store, which sees every thread's jobs."""
+    from gh_archive_clickhouse_spark.plans.streaming_queries import (
+        _two_half_source,
+    )
+    from gh_archive_clickhouse_spark.streaming.dedup_stream import (
+        incremental_lsh_sink,
+    )
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def job_ids() -> set[int]:
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    src = str(tmp_path / "docs")
+    _two_half_source(
+        read(spark, SF_DIR, "documents"), F.col("doc_id") % 2 == 0, src
+    )
+    stream = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    before = job_ids()
+    q = (
+        stream.writeStream.foreachBatch(
+            incremental_lsh_sink(
+                str(tmp_path / "sigs"), str(tmp_path / "pairs")
+            )
+        )
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.awaitTermination()
+    assert q.lastProgress["batchId"] == 1  # two micro-batches ran
+    started = job_ids() - before
+    in_group = set(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert started
+    assert started <= in_group, sorted(started - in_group)
 
 
 def test_incremental_lsh_log_compaction_bounds_files(spark, tmp_path):
