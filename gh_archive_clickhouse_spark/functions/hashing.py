@@ -9,7 +9,12 @@ the top 15 hex chars (60 bits, always < 2^63 so the cast never
 overflows a signed int64).
 
 All expressions are Catalyst built-ins (md5/substring/conv/cast):
-JVM-side, codegen'd, no Python in the hot path.
+JVM-side, codegen'd, no Python in the hot path. Each hash has two
+renderings of one formula, side by side: a Column builder and a Spark
+SQL text builder (``*_sql``) for projections parsed from one string
+(operators/dedup.py's module docstring says why). Both read
+:data:`MD5_NIBBLES` and :data:`MERSENNE31`, and tests/test_operators.py
+pins both to ``hashlib.md5``.
 """
 
 from __future__ import annotations
@@ -20,6 +25,8 @@ from pyspark.sql import functions as F
 # 2^31 - 1: Mersenne prime; modular arithmetic stays well inside int64
 # for multiply-accumulate folds (acc < 2^31, coefficient < 2^20).
 MERSENNE31 = 2147483647
+# Hex digits of the md5 digest kept by md5_long: 15 nibbles = 60 bits.
+MD5_NIBBLES = 15
 
 
 def md5_long(col: Column | str) -> Column:
@@ -28,13 +35,25 @@ def md5_long(col: Column | str) -> Column:
     md5 hex → first 15 nibbles → base-16 to base-10 → long.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+    return F.conv(F.substring(F.md5(c), 1, MD5_NIBBLES), 16, 10).cast("long")
+
+
+def md5_long_sql(arg: str) -> str:
+    """:func:`md5_long` of the SQL expression ``arg``, as Spark SQL text
+    (the same Catalyst expression once parsed)."""
+    return f"CAST(conv(substring(md5({arg}), 1, {MD5_NIBBLES}), 16, 10) AS BIGINT)"
 
 
 def word_hash31(col: Column | str) -> Column:
     """31-bit hash (md5-derived, mod 2^31-1) — safe for mod-arithmetic
     minhash/fingerprint folds without int64 overflow."""
     return md5_long(col) % F.lit(MERSENNE31)
+
+
+def word_hash31_sql(arg: str) -> str:
+    """:func:`word_hash31` of the SQL expression ``arg``, as Spark SQL
+    text."""
+    return f"({md5_long_sql(arg)} % {MERSENNE31})"
 
 
 def minhash_param_hash(word_hash: Column, i: Column) -> Column:

@@ -18,6 +18,17 @@ extensions, built shuffle-lean for 100 TB:
   materializes; the bucket join shuffles on (band, band_hash), which is
   uniformly distributed by construction (shingle-less docs excluded —
   see lsh_candidate_pairs).
+- Wide or looped expressions are built as **SQL text**, one
+  ``F.expr``/``selectExpr`` parse per projection: the MinHash
+  aggregate, the shingle projections, the band fold, the LSH join
+  conditions and selects, SimHash's packed counters. Under PySpark
+  4.1 every ``F.*`` call and ``Column.alias`` captures its Python call
+  site (``_with_origin``), which costs about 13 py4j round-trips per
+  call; a 16-way MinHash aggregate built Column by Column took ~1,900
+  round-trips (0.2-0.4 s of driver time with no job running, paid
+  again on every micro-batch of a streaming sink). A parsed string is
+  3 round-trips. Hash formulas are never inlined here: they come from
+  functions/hashing.py's ``*_sql`` builders.
 """
 
 from __future__ import annotations
@@ -28,7 +39,7 @@ from pyspark.sql import functions as F
 from gh_archive_clickhouse_spark.functions.hashing import (
     MERSENNE31,
     md5_long,
-    word_hash31,
+    word_hash31_sql,
 )
 from gh_archive_clickhouse_spark.functions.text import tokens, word_shingles
 from gh_archive_clickhouse_spark.operators._util import ensure_parallelism
@@ -143,24 +154,12 @@ def minhash_signatures(
     set and a signature of p (the modulus) — they never collide.
     """
     exploded = _shingle_hash_rows(df, text_col, id_col, shingle_k, kind)
-    mins = exploded.groupBy(id_col).agg(
-        *[
-            F.min(
-                (F.lit(2 * i + 1) * F.col("__x") + F.lit(12345 * i + 17))
-                % F.lit(MERSENNE31)
-            ).alias(f"__mh{i}")
-            for i in range(num_hashes)
-        ]
+    mins = ", ".join(
+        f"coalesce(min(({2 * i + 1} * __x + {12345 * i + 17}) % {MERSENNE31}), "
+        f"{MERSENNE31})"
+        for i in range(num_hashes)
     )
-    return mins.select(
-        F.col(id_col),
-        F.array(
-            *[
-                F.coalesce(F.col(f"__mh{i}"), F.lit(MERSENNE31))
-                for i in range(num_hashes)
-            ]
-        ).alias("minhash"),
-    )
+    return exploded.groupBy(id_col).agg(F.expr(f"array({mins}) AS minhash"))
 
 
 def _shingle_hash_rows(
@@ -181,44 +180,38 @@ def _shingle_hash_rows(
     (explode_outer), which every min() ignores — preserving the
     "empty set → signature of p" contract downstream.
     """
+    def offsets(n: str) -> str:
+        return (
+            f"explode_outer(CASE WHEN {n} >= {shingle_k} "
+            f"THEN sequence(1, {n} - {shingle_k - 1}) "
+            "ELSE CAST(array() AS ARRAY<INT>) END) AS __i"
+        )
+
     if kind == "char":
-        c = F.col(text_col)
-        offsets = F.when(
-            F.length(c) >= shingle_k,
-            F.sequence(F.lit(1), F.length(c) - F.lit(shingle_k - 1)),
-        ).otherwise(F.array().cast("array<int>"))
         return (
             ensure_parallelism(df)
-            .select(F.col(id_col), c.alias("__txt"), F.explode_outer(offsets).alias("__i"))
-            .select(
-                F.col(id_col),
-                word_hash31(
-                    F.substring(F.col("__txt"), F.col("__i"), shingle_k)
-                ).alias("__x"),
+            .selectExpr(
+                id_col,
+                f"{text_col} AS __txt",
+                offsets(f"length({text_col})"),
+            )
+            .selectExpr(
+                id_col,
+                f"{word_hash31_sql(f'substring(__txt, __i, {shingle_k})')} AS __x",
             )
         )
     toks = ensure_parallelism(df).select(
         F.col(id_col), tokens(F.col(text_col)).alias("__t")
     )
-    offsets = F.when(
-        F.size("__t") >= shingle_k,
-        F.sequence(F.lit(1), F.size("__t") - F.lit(shingle_k - 1)),
-    ).otherwise(F.array().cast("array<int>"))
-    return toks.select(
-        F.col(id_col), F.col("__t"), F.explode_outer(offsets).alias("__i")
-    ).select(
-        F.col(id_col),
-        # The NULL guard is load-bearing: concat_ws maps a NULL slice to
-        # '' (it never returns NULL), so without it every shingle-less
-        # doc would hash to word_hash31('') — one shared signature for
-        # all short/empty docs instead of the sentinel, i.e. the exact
-        # one-bucket skew bomb the sentinel exclusion defuses.
-        F.when(
-            F.col("__i").isNotNull(),
-            word_hash31(
-                F.concat_ws(" ", F.slice(F.col("__t"), F.col("__i"), shingle_k))
-            ),
-        ).alias("__x"),
+    # The NULL guard is load-bearing: concat_ws maps a NULL slice to ''
+    # (it never returns NULL), so without it every shingle-less doc
+    # would hash to word_hash31('') — one shared signature for all
+    # short/empty docs instead of the sentinel, i.e. the exact
+    # one-bucket skew bomb the sentinel exclusion defuses.
+    shingle = f"concat_ws(' ', slice(__t, __i, {shingle_k}))"
+    return toks.selectExpr(id_col, "__t", offsets("size(__t)")).selectExpr(
+        id_col,
+        f"CASE WHEN __i IS NOT NULL THEN {word_hash31_sql(shingle)} END AS __x",
     )
 
 
@@ -280,22 +273,19 @@ def lsh_candidate_pairs(
     empty docs → one bucket → n² pairs).
     """
     banded = _banded(sigs, id_col, bands, rows_per_band)
-    left = banded.alias("l")
-    right = banded.alias("r")
     return (
-        left.join(
-            right,
-            on=[
-                F.col("l.band_id") == F.col("r.band_id"),
-                F.col("l.band_key") == F.col("r.band_key"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("doc_a"),
-            F.col(f"r.{id_col}").alias("doc_b"),
-        )
+        banded.alias("l")
+        .join(banded.alias("r"), F.expr(_bucket_match(f"l.{id_col} < r.{id_col}")))
+        .selectExpr(f"l.{id_col} AS doc_a", f"r.{id_col} AS doc_b")
         .distinct()
+    )
+
+
+def _bucket_match(*extra: str) -> str:
+    """SQL join condition of two ``_banded`` sides aliased ``l`` and
+    ``r``: equal (band_id, band_key), plus any ``extra`` conjuncts."""
+    return " AND ".join(
+        ("l.band_id = r.band_id", "l.band_key = r.band_key", *extra)
     )
 
 
@@ -304,18 +294,15 @@ def _banded(
 ) -> DataFrame:
     """(id, band_id, band_key) rows for LSH bucketing; sentinel
     (shingle-less) signatures excluded — see lsh_candidate_pairs."""
-    sigs = sigs.filter(F.col("minhash")[0] != MERSENNE31)
-    band_cols = []
+    band_rows = []
     for b in range(bands):
-        acc = F.lit(0).cast("long")
+        acc = "0L"
         for r in range(rows_per_band):
-            acc = (acc * F.lit(31) + F.col("minhash")[b * rows_per_band + r]) % F.lit(
-                MERSENNE31
-            )
-        band_cols.append(F.struct(F.lit(b).alias("band_id"), acc.alias("band_key")))
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("band")
-    ).select(id_col, "band.band_id", "band.band_key")
+            acc = f"({acc} * 31 + minhash[{b * rows_per_band + r}]) % {MERSENNE31}"
+        band_rows.append(f"named_struct('band_id', {b}, 'band_key', {acc})")
+    return sigs.where(f"minhash[0] != {MERSENNE31}").selectExpr(
+        id_col, f"inline(array({', '.join(band_rows)}))"
+    )
 
 
 def lsh_candidate_pairs_between(
@@ -340,19 +327,14 @@ def lsh_candidate_pairs_between(
     """
     n = _banded(new_sigs, id_col, bands, rows_per_band).alias("l")
     a = _banded(all_sigs, id_col, bands, rows_per_band).alias("r")
-    joined = n.join(
-        a,
-        on=[
-            F.col("l.band_id") == F.col("r.band_id"),
-            F.col("l.band_key") == F.col("r.band_key"),
-            F.col(f"l.{id_col}") != F.col(f"r.{id_col}"),
-        ],
+    return (
+        n.join(a, F.expr(_bucket_match(f"l.{id_col} != r.{id_col}")))
+        .selectExpr(
+            f"least(l.{id_col}, r.{id_col}) AS doc_a",
+            f"greatest(l.{id_col}, r.{id_col}) AS doc_b",
+        )
+        .distinct()
     )
-    lo = F.least(F.col(f"l.{id_col}"), F.col(f"r.{id_col}"))
-    hi = F.greatest(F.col(f"l.{id_col}"), F.col(f"r.{id_col}"))
-    return joined.select(
-        lo.alias("doc_a"), hi.alias("doc_b")
-    ).distinct()
 
 
 def cross_split_candidates(
@@ -379,17 +361,8 @@ def cross_split_candidates(
     a = _banded(sigs_a, id_col, bands, rows_per_band).alias("l")
     b = _banded(sigs_b, id_col, bands, rows_per_band).alias("r")
     return (
-        a.join(
-            b,
-            on=[
-                F.col("l.band_id") == F.col("r.band_id"),
-                F.col("l.band_key") == F.col("r.band_key"),
-            ],
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
+        a.join(b, F.expr(_bucket_match()))
+        .selectExpr(f"l.{id_col} AS id_a", f"r.{id_col} AS id_b")
         .distinct()
     )
 
@@ -517,10 +490,7 @@ def simhash(
     # lane can carry into its neighbor. Empty docs: the explode_outer
     # NULL row makes every packed term NULL -> sums NULL -> every
     # when() false -> fingerprint 0, matching the ±1 formulation.
-    # All wide expressions are built as SQL TEXT and parsed with one
-    # F.expr call each: constructing them Column-by-Column costs
-    # hundreds of py4j round-trips (~1.5s of driver time per plan
-    # build, measured) while a single JVM parse is milliseconds.
+    # Wide expressions are SQL text (see the module docstring).
     per_long, lane_bits = 2, 32
     ngroups = (bits + per_long - 1) // per_long
     packs = []

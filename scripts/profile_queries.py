@@ -18,7 +18,11 @@ One JSON line per query:
   bytes. The store sees every thread's jobs, stream-execution threads
   included, with the UI off;
 - ``plan_nodes`` and ``exchanges`` of that run's executed plan
-  (``perfbench/tracing.plan_stats``).
+  (``perfbench/tracing.plan_stats``);
+- ``py4j_calls``: the py4j round-trips of that run, build and action,
+  from every thread (``gh_archive_clickhouse_spark.profile.py4j_calls``).
+  A call that waits on no job costs 25-80 µs of driver time that no
+  counter above sees.
 
 ``--plans-dir`` writes ``explain("formatted")`` of the result frame to
 ``<plans-dir>/<query>_<suffix>.txt`` before the timed runs. ``--jobs``
@@ -93,6 +97,7 @@ def main() -> int:
 
     from gh_archive_clickhouse_spark.plans.common import read
     from gh_archive_clickhouse_spark.plans.registry import QUERIES
+    from gh_archive_clickhouse_spark.profile import py4j_calls
     from gh_archive_clickhouse_spark.session import get_spark
 
     # The status store keeps 1000 jobs and stages by default; a long
@@ -127,14 +132,16 @@ def main() -> int:
         for _ in range(args.runs):
             counters.skip()
             first_job = counters.last + 1
-            e0, t0 = time.time(), time.perf_counter()
-            df = _run(spark, builder, args.sf_dir)
-            t1 = time.perf_counter()
+            with py4j_calls() as calls:
+                e0, t0 = time.time(), time.perf_counter()
+                df = _run(spark, builder, args.sf_dir)
+                t1 = time.perf_counter()
             samples.append(round(t1 - t0, 3))
         # counters of the last (steady-state) run
         rec = {"min": min(samples), "samples": samples}
         rec.update(counters.collect((t0, t1), e0))
         rec.update(plan_stats(df))
+        rec["py4j_calls"] = calls.n
         results[name] = rec
         print(json.dumps({name: rec}), flush=True)
         if args.jobs:
