@@ -59,10 +59,26 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     under-partitioned (e.g. one small parquet file → one task, so 31 of
     32 local cores idle).
 
-    Only repartitions when the source has fewer partitions than half
-    the cluster's default parallelism — a well-partitioned 100 TB input
-    passes through untouched (no extra shuffle)."""
+    Decides from the plan alone and never starts a job. A root
+    ``repartition(n)`` has n partitions, and a plan that AQE does not
+    wrap (a scan, a checkpoint, a stream micro-batch) has the split
+    count the driver plans for it. Either fans out only below half the
+    cluster's default parallelism, so a well-partitioned 100 TB input
+    passes through untouched (no extra shuffle). Any other plan (one
+    with a shuffle or a broadcast) fans out directly: AQE sets its
+    partition count at run time, and reading it here would run the
+    plan's map stages as jobs of their own that the real action then
+    runs again. A small shuffle output lands in one partition anyway;
+    on a large one the fan-out costs one round-robin shuffle more."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < max(target // 2, 1):
+    qe = df._jdf.queryExecution()
+    root = qe.logical()
+    if root.nodeName() == "Repartition" and root.shuffle():
+        n = root.numPartitions()
+    elif qe.executedPlan().nodeName() != "AdaptiveSparkPlan":
+        n = qe.toRdd().getNumPartitions()
+    else:
+        return df.repartition(target)
+    if n < max(target // 2, 1):
         return df.repartition(target)
     return df

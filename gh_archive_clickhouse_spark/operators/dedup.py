@@ -985,6 +985,50 @@ def shingle_jaccard(a_col: str = "sha_", b_col: str = "shb_") -> Column:
     ).otherwise(F.lit(0.0))
 
 
+def verify_candidates(
+    docs: DataFrame,
+    pairs: DataFrame,
+    shingle_k: int = 3,
+    kind: str = "word",
+    a_col: str = "doc_a",
+    b_col: str = "doc_b",
+) -> DataFrame:
+    """The exact-Jaccard verify step of every MinHash-LSH pass:
+    (a_col, b_col, jaccard) for each candidate pair in ``pairs``, over
+    the distinct ``kind`` ``shingle_k``-shingles of ``docs``' (doc_id,
+    text).
+
+    Shingle sets are built ONLY for candidate docs: at corpus scale
+    the candidates are a vanishing fraction, so the expensive array
+    materialization never touches the rest. The candidate ids come
+    from a row-local explode, not a union of two projections: the
+    union's branches would each re-execute the banded self-join (no
+    ReusedExchange fires across them). The semi-join is UNHINTED (the
+    qe14 rule): the candidate-id set scales with the corpus's near-dup
+    count, a vanishing fraction but not a bounded size, so a forced
+    broadcast OOMs the executors exactly when the corpus is dirty
+    enough for dedup to matter; AQE broadcasts it only while its
+    runtime size is under the threshold.
+    """
+    cand_ids = pairs.selectExpr(
+        f"explode(array({a_col}, {b_col})) AS doc_id"
+    ).distinct()
+    sh = shingle_sets(
+        docs.join(cand_ids, "doc_id", "left_semi"),
+        "text",
+        "doc_id",
+        shingle_k,
+        kind,
+    )
+    a = sh.selectExpr(f"doc_id AS {a_col}", "__sh AS sha_")
+    b = sh.selectExpr(f"doc_id AS {b_col}", "__sh AS shb_")
+    return (
+        pairs.join(a, a_col)
+        .join(b, b_col)
+        .select(a_col, b_col, shingle_jaccard().alias("jaccard"))
+    )
+
+
 def dedup_survivors(
     corpus: DataFrame,
     pairs: DataFrame,

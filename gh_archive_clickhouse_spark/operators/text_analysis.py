@@ -78,7 +78,7 @@ def quality_features(text_col: str = "text") -> dict:
     double's binary expansion and DuckDB's float-path rounding
     disagree within an ULP. The r12 sf1 stress sweep caught exactly
     that: qx56 flipped one quality value of 47,566 (0.510313 vs
-    0.510312, ``artifacts/sweep_sf1_stress.json``). The unrounded
+    0.510312; fixed in commit 56e2fd0). The unrounded
     values need no rounding for parity in the first place: identical
     integer inputs → identical double casts → the same IEEE division/
     multiply-add DAG in both engines → bit-identical doubles (the

@@ -22,9 +22,9 @@ from gh_archive_clickhouse_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
     shingle_jaccard,
-    shingle_sets,
     simhash,
     simhash_candidate_pairs,
+    verify_candidates,
 )
 from gh_archive_clickhouse_spark.operators._util import (
     ensure_parallelism,
@@ -189,31 +189,7 @@ def qx9_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per consumer (candidate-id scan + verify join) — that recompute
     # is a cheap bucket join, and skipping a second checkpoint barrier
     # keeps the whole query a two-job pipeline.
-    pairs = lsh_candidate_pairs(sigs)
-    # Verification recomputes shingle sets ONLY for candidate docs —
-    # at corpus scale the candidates are a vanishing fraction, so the
-    # expensive array materialization never touches non-candidates.
-    # Row-local explode, not union-of-two-projections: the union's
-    # branches would each re-execute the banded self-join (no
-    # ReusedExchange fires across them).
-    cand_ids = (
-        pairs.select(
-            F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-        ).distinct()
-    )
-    # UNHINTED semi-join (r15, the qe14 rule): the candidate-id set
-    # scales with the corpus's near-dup count — a vanishing FRACTION
-    # but not a bounded SIZE, so a forced broadcast OOMs the executors
-    # exactly when the corpus is dirty enough for dedup to matter.
-    # AQE broadcasts it at fixture scale (runtime size under the
-    # threshold) and degrades to a shuffled semi-join at warehouse SF.
-    docs_c = docs.join(cand_ids, "doc_id", "left_semi")
-    sh = shingle_sets(docs_c, "text", "doc_id", 3)
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("__sh").alias("sha_"))
-    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("__sh").alias("shb_"))
-    joined = pairs.join(a, "doc_a").join(b, "doc_b")
-    jac = shingle_jaccard()
-    return joined.select("doc_a", "doc_b", jac.alias("jaccard"))
+    return verify_candidates(docs, lsh_candidate_pairs(sigs))
 
 
 def qx10_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -426,24 +402,7 @@ def qx20_chargram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of qx9's 4x4 (~0.71) — candidate volume stays near the
     # true near-dup count instead of exploding template-sharing docs.
     pairs = lsh_candidate_pairs(sigs, bands=2, rows_per_band=8)
-    # Exact-Jaccard verify touches ONLY candidate docs (semi-join
-    # before the interpreted gram-array materialization). Row-local
-    # explode — one execution of the banded self-join, not one per
-    # union branch (the qx9 rule).
-    cand_ids = (
-        pairs.select(
-            F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-        ).distinct()
-    )
-    # Unhinted semi-join — cand_ids scales with the corpus (qe14
-    # rule, same as qx9); AQE picks broadcast only while it's small.
-    docs_c = docs.join(cand_ids, "doc_id", "left_semi")
-    sh = shingle_sets(docs_c, "text", "doc_id", 4, kind="char")
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("__sh").alias("sha_"))
-    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("__sh").alias("shb_"))
-    joined = pairs.join(a, "doc_a").join(b, "doc_b")
-    jac = shingle_jaccard()
-    scored = joined.select("doc_a", "doc_b", jac.alias("jaccard"))
+    scored = verify_candidates(docs, pairs, shingle_k=4, kind="char")
     return scored.filter(F.col("jaccard") >= 0.7)
 
 
@@ -1626,24 +1585,8 @@ def qx57_split_leakage_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     tsigs = sigs.join(train.select("doc_id"), "doc_id", "left_semi")
     hsigs = sigs.join(held.select("doc_id"), "doc_id", "left_semi")
     cand = cross_split_candidates(tsigs, hsigs)
-    # Row-local explode — one execution of the sided banding, not one
-    # per union branch (the qx9 rule).
-    cand_ids = (
-        cand.select(
-            F.explode(F.array("id_a", "id_b")).alias("doc_id")
-        ).distinct()
-    )
-    # Unhinted semi-join — cand_ids scales with the corpus (qe14
-    # rule, same as qx9); AQE picks broadcast only while it's small.
-    docs_c = docs.join(cand_ids, "doc_id", "left_semi")
-    sh = shingle_sets(docs_c, "text", "doc_id", 3)
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("__sh").alias("sha_"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("__sh").alias("shb_"))
-    jac = shingle_jaccard()
     leaked = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", jac.alias("jaccard"))
+        verify_candidates(docs, cand, a_col="id_a", b_col="id_b")
         .filter(F.col("jaccard") >= 0.7)
         .select(F.col("id_a").alias("doc_id"))
         .distinct()

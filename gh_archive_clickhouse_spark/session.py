@@ -33,9 +33,6 @@ def default_configs() -> dict[str, str]:
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        # Small local datasets: don't let AQE keep 1-partition plans from
-        # under-using cores; harmless on a cluster.
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
         "spark.sql.parquet.compression.codec": "zstd",
         "spark.sql.files.maxPartitionBytes": "128m",
         # File-split floor: the 4 MB default makes any file under ~4 MB

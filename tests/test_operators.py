@@ -413,6 +413,32 @@ def test_ensure_parallelism_fans_out_small_inputs(spark):
     assert ensure_parallelism(fanned) is fanned
 
 
+def test_ensure_parallelism_starts_no_job(spark):
+    """ensure_parallelism decides from the plan alone. On a shuffled
+    input, reading the partition count would run the shuffle's map
+    stage as a job of its own under AQE (the real action then runs it
+    again), so such an input fans out directly. Scans and a root
+    ``repartition(n)`` are counted without a job. Jobs are read from
+    Spark's status store, which lists the newest first."""
+    jsc = spark.sparkContext._jsc.sc()
+    target = spark.sparkContext.defaultParallelism
+
+    def last_job() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    docs = _docs(spark)
+    counts = docs.groupBy("lang").count()
+    wide = docs.repartition(target)
+    before = last_job()
+    fanned = ensure_parallelism(counts)
+    assert ensure_parallelism(wide) is wide
+    ensure_parallelism(docs)
+    assert last_job() == before
+    assert fanned.rdd.getNumPartitions() == target
+
+
 def test_asof_join_matches_naive(spark):
     """asof_join == per-row 'latest right at-or-before left.ts'."""
     from gh_archive_clickhouse_spark.operators.asof import asof_join
