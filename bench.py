@@ -326,7 +326,9 @@ def flag_regressions(
             # means the "growth" lives entirely in the normalization
             # base, not in the query
             pr = prev_raw.get(name)
-            raw_flat = bool(pr and pr > 0 and t / pr <= 1.10)
+            # t <= 1.10 * pr, not t / pr <= 1.10: the quotient of an
+            # exactly 10% movement can round above 1.10
+            raw_flat = bool(pr and pr > 0 and t <= 1.10 * pr)
             if raw_rule_armed and raw_flat:
                 cal_only_flags[name] = [p, cur]
                 continue

@@ -44,12 +44,6 @@ from gh_archive_clickhouse_spark.functions.hashing import (
 from gh_archive_clickhouse_spark.functions.text import tokens, word_shingles
 from gh_archive_clickhouse_spark.operators._util import ensure_parallelism
 
-# Scratch-vs-durable materialization: callers wanting a REUSABLE
-# persisted index pass a stable ``name`` (written at the materialize
-# dir root, never swept); anonymous calls go through materialize's
-# scratch path — per-call-unique under _scratch/<app>/, garbage-
-# collected by its TTL sweep.
-
 
 def latest_by_key(
     df: DataFrame, keys: list[str], order: list[Column]
@@ -795,7 +789,6 @@ def containment_pairs(
     shingle_k: int = 3,
     max_df: int = 50,
     threshold: float = 0.6,
-    name: str | None = None,
 ) -> DataFrame:
     """Containment near-dup pairs: |A∩B| / min(|A|,|B|) over word
     k-shingle sets — the ASYMMETRIC overlap measure that catches
@@ -843,8 +836,7 @@ def containment_pairs(
             .select("__sh31"),
             "__sh31",
         ),
-        name or "containment_kept_index",
-        durable=name is not None,
+        "containment_kept_index",
     )
     sizes = kept.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
     left = kept.alias("l")
@@ -900,7 +892,6 @@ def long_gram_overlap_pairs(
     gram: int = 20,
     max_df: int = 50,
     min_shared: int = 1,
-    name: str | None = None,
 ) -> DataFrame:
     """ExactSubstr-style VERBATIM-SPAN detector: pairs of documents
     sharing at least ``min_shared`` sliding ``gram``-token windows.
@@ -940,8 +931,7 @@ def long_gram_overlap_pairs(
             .select("__gh"),
             "__gh",
         ),
-        name or "longgram_kept_index",
-        durable=name is not None,
+        "longgram_kept_index",
     )
     left = kept.alias("l")
     right = kept.alias("r")

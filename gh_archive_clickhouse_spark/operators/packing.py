@@ -46,7 +46,6 @@ def densify_order(
     df: DataFrame,
     order_col: str,
     out_col: str = "dense_id",
-    name: str | None = None,
     validate_distinct: bool = False,
     bucket_of: Column | None = None,
 ) -> DataFrame:
@@ -77,10 +76,7 @@ def densify_order(
     DISTINCT — ties make the ranks run-to-run ambiguous and nothing
     downstream detects them; pass ``validate_distinct=True`` to pay
     one extra aggregate for an explicit check when the source doesn't
-    guarantee uniqueness. ``name`` keys the materialization under
-    ``SPARK_GRAFT_MATERIALIZE_DIR`` — defaulted to a per-call-unique
-    value so two densify passes in one pipeline never clobber each
-    other's table.
+    guarantee uniqueness.
 
     ``bucket_of`` (r15, guide §2.4): when the caller can supply a
     DETERMINISTIC key-contiguous bucket expression (monotone
@@ -118,17 +114,14 @@ def densify_order(
     # within one planned exchange).
     if bucket_of is not None:
         parts = materialize(
-            df.withColumn("__pid", bucket_of),
-            name or "densify_parts",
-            durable=name is not None,
+            df.withColumn("__pid", bucket_of), "densify_parts"
         )
     else:
         parts = materialize(
             df.repartitionByRange(F.col(order_col)).withColumn(
                 "__pid", F.spark_partition_id()
             ),
-            name or "densify_parts",
-            durable=name is not None,
+            "densify_parts",
         )
     counts = parts.groupBy("__pid").agg(F.count(F.lit(1)).alias("__pn"))
     w_parts = Window.orderBy("__pid").rowsBetween(
@@ -156,7 +149,6 @@ def seeded_shuffle(
     id_col: str = "doc_id",
     seed: str = "shuffle-v1",
     out_col: str = "shuffle_pos",
-    name: str | None = None,
     validate_distinct: bool = False,
 ) -> DataFrame:
     """Deterministic seeded corpus shuffle — the reproducible
@@ -224,7 +216,6 @@ def seeded_shuffle(
         df.withColumn("__shuffle_key", key),
         "__shuffle_key",
         out_col=out_col,
-        name=name,
         bucket_of=bucket,
     ).drop("__shuffle_key")
 
@@ -234,7 +225,6 @@ def budget_select(
     weight_col: str,
     budget: int,
     order_by: list[Column],
-    name: str | None = None,
 ) -> DataFrame:
     """Greedy budgeted selection: take rows in ``order_by`` order
     until their cumulative ``weight_col`` reaches ``budget`` — the
@@ -279,8 +269,7 @@ def budget_select(
         df.repartitionByRange(*order_by).withColumn(
             "__pid", F.spark_partition_id()
         ),
-        name or "budget_parts",
-        durable=name is not None,
+        "budget_parts",
     )
     # assert_true returns NULL when the predicate holds and raises
     # otherwise; phrased as a filter (never as an unused column, which

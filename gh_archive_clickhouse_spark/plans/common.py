@@ -175,9 +175,8 @@ class Query:
 # the same path would silently replace the earlier call's data).
 _SCRATCH_SEQ = itertools.count()
 # Scratch trees from OTHER applications older than this are garbage-
-# collected on this process's first SCRATCH materialize (durable
-# writes never sweep). A day is far past any plausible concurrent-job
-# overlap; tests set it to 0.
+# collected on this process's first materialize. A day is far past
+# any plausible concurrent-job overlap; tests set it to 0.
 SCRATCH_TTL_ENV = "SPARK_GRAFT_SCRATCH_TTL"
 _SWEPT = False
 
@@ -227,9 +226,7 @@ def sweep_scratch(
     return removed
 
 
-def materialize(
-    df: DataFrame, name: str, durable: bool = False
-) -> DataFrame:
+def materialize(df: DataFrame, name: str) -> DataFrame:
     """Compute-once materialization for frames consumed by both sides
     of a self-join (LSH signatures, IVF assignments): Spark plans each
     side of a self-join independently, so an unmaterialized input runs
@@ -242,34 +239,25 @@ def materialize(
     and read it back — the durable form for multi-stage jobs on real
     clusters where executor loss is routine.
 
-    Lifecycle: by default the table is SCRATCH — written under
+    Lifecycle: the table is SCRATCH — written under
     ``_scratch/<spark application id>/<name>_<seq>`` (per-call-unique,
     so lazily-composed operator calls can never clobber each other)
     and garbage-collected: this process's first scratch write sweeps
     trees left by finished applications (older than
     ``SPARK_GRAFT_SCRATCH_TTL`` seconds, default one day), and
-    :func:`sweep_scratch` is the explicit form. ``durable=True``
-    (operators set it when the CALLER supplied a stable index name)
-    writes to ``<dir>/<name>`` and is never swept — the reusable form
-    for a signature/index table probed by every later dedup/ANN run,
-    not just this query.
+    :func:`sweep_scratch` is the explicit form.
     """
     import os
 
     base = os.environ.get("SPARK_GRAFT_MATERIALIZE_DIR")
     if base:
-        if durable:
-            path = f"{base}/{name}"
-        else:
-            global _SWEPT
-            app = df.sparkSession.sparkContext.applicationId
-            if not _SWEPT:
-                _SWEPT = True
-                ttl = float(os.environ.get(SCRATCH_TTL_ENV, 86400))
-                sweep_scratch(current_app_id=app, min_age_seconds=ttl)
-            path = (
-                f"{base}/_scratch/{app}/{name}_{next(_SCRATCH_SEQ)}"
-            )
+        global _SWEPT
+        app = df.sparkSession.sparkContext.applicationId
+        if not _SWEPT:
+            _SWEPT = True
+            ttl = float(os.environ.get(SCRATCH_TTL_ENV, 86400))
+            sweep_scratch(current_app_id=app, min_age_seconds=ttl)
+        path = f"{base}/_scratch/{app}/{name}_{next(_SCRATCH_SEQ)}"
         df.write.mode("overwrite").parquet(path)
         return df.sparkSession.read.parquet(path)
     return df.localCheckpoint(eager=False)

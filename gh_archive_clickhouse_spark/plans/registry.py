@@ -66,7 +66,9 @@ _CHANGED_ROUND = 17
 # (operators/dedup.verify_candidates) reaches qx9, qx20, qx26, qx31,
 # qx42, qx43, qx56 and qx57; qx20 and qx42 are pinned, and the budget
 # has no room for more: pinning qx57 alone leaves qt32's row older
-# than the budget after the next round.
+# than the budget after the next round. The epoch tables
+# (streaming/dedup_stream.EpochTable) also reach qs7, qs10 and qs11,
+# which rotate in by staleness: pinning qs11 alone breaks the budget.
 _CHANGED = (
     "qx52_bpe_encode",
     "qx42_preprocess_pipeline",

@@ -309,8 +309,8 @@ def qs4_stream_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the BATCH operator's pair set — which is exactly what the
     oracle (the qx9 banding SQL) asserts."""
     from gh_archive_clickhouse_spark.streaming.dedup_stream import (
-        PAIRS_SCHEMA,
         incremental_lsh_sink,
+        pairs_table,
     )
 
     docs = read(spark, sf_dir, "documents")
@@ -319,15 +319,8 @@ def qs4_stream_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, docs, F.col("doc_id") % 2 == 0, base, "docs",
             incremental_lsh_sink(f"{base}/sigs", f"{base}/pairs"),
         )
-        # Explicit schema: a zero-candidate corpus leaves the pairs log
-        # with no data files, where schema inference would throw; the
-        # read then yields the correct EMPTY frame.
         return snapshot_result(
-            spark.read.schema(PAIRS_SCHEMA)
-            .parquet(f"{base}/pairs")
-            .select("doc_a", "doc_b")
-            .distinct(),
-            "qs4",
+            pairs_table(f"{base}/pairs").read_set(spark), "qs4"
         )
 
 
@@ -572,36 +565,29 @@ def qs11_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_score,
     )
     from gh_archive_clickhouse_spark.streaming.dedup_stream import (
-        write_epoch,
+        EpochTable,
     )
 
     docs = read(spark, sf_dir, "documents")
     with _scratch("qs11_") as base:
-        out = f"{base}/curated"
+        curated = EpochTable(
+            f"{base}/curated", "doc_id long, quality double", ("doc_id",)
+        )
 
         def _gate(batch_df: DataFrame, epoch_id: int) -> None:
-            write_epoch(
+            curated.commit(
                 quality_score(batch_df)
                 .filter(F.col("quality") >= 0.75)
                 .select("doc_id", "quality")
                 .repartition(1),
-                out,
                 epoch_id,
             )
 
         _run_two_half(
             spark, docs, F.col("doc_id") % 2 == 0, base, "docs", _gate
         )
-        # Explicit schema (a fully-rejected corpus leaves no data
-        # files); dropDuplicates tolerates at-least-once replays;
-        # the snapshot pins the frame before scratch cleanup.
-        return snapshot_result(
-            spark.read.schema("doc_id long, quality double, epoch int")
-            .parquet(out)
-            .select("doc_id", "quality")
-            .dropDuplicates(["doc_id"]),
-            "qs11",
-        )
+        # the snapshot pins the frame before scratch cleanup
+        return snapshot_result(curated.read_set(spark), "qs11")
 
 
 ADMISSION_BUDGET = 1_000
@@ -739,12 +725,16 @@ def qs14_stream_mixture_gate(
         _ranked_weight_rows,
     )
     from gh_archive_clickhouse_spark.streaming.dedup_stream import (
-        write_epoch,
+        EpochTable,
     )
 
     docs = read(spark, sf_dir, "documents")
     with _scratch("qs14_") as base:
-        out = f"{base}/mixed"
+        mixed = EpochTable(
+            f"{base}/mixed",
+            "doc_id long, source string, rate_ppm long",
+            ("doc_id",),
+        )
         # The snapshot batch job: ONE per-source-count aggregate of
         # the corpus feeds both qx60's rank-derived non-uniform spec
         # (driver-built O(sources) literal over the observed sources
@@ -761,29 +751,18 @@ def qs14_stream_mixture_gate(
         rates = spark.read.parquet(rates_path)
 
         def _gate(batch_df: DataFrame, epoch_id: int) -> None:
-            write_epoch(
+            mixed.commit(
                 mixture_gate(batch_df, rates, salt=QX60_SALT)
                 .select("doc_id", "source", "rate_ppm")
                 .repartition(1),
-                out,
                 epoch_id,
             )
 
         _run_two_half(
             spark, docs, F.col("doc_id") % 2 == 0, base, "docs", _gate
         )
-        # Explicit schema (a fully-rejected corpus leaves no data
-        # files); dropDuplicates tolerates at-least-once replays;
-        # the snapshot pins the frame before scratch cleanup.
-        return snapshot_result(
-            spark.read.schema(
-                "doc_id long, source string, rate_ppm long, epoch int"
-            )
-            .parquet(out)
-            .select("doc_id", "source", "rate_ppm")
-            .dropDuplicates(["doc_id"]),
-            "qs14",
-        )
+        # the snapshot pins the frame before scratch cleanup
+        return snapshot_result(mixed.read_set(spark), "qs14")
 
 
 QS15_QUALITY_BAR = 0.75
@@ -836,15 +815,19 @@ def qs15_stream_preprocess_pipeline(
     )
     from gh_archive_clickhouse_spark.streaming.dedup_stream import (
         LABELS_SCHEMA,
+        EpochTable,
         fold_cluster_labels,
         incremental_dedup_sink,
-        write_epoch,
     )
 
     docs = read(spark, sf_dir, "documents")
     q_col = quality_features()["quality"]
     with _scratch("qs15_") as base:
-        out = f"{base}/curated"
+        curated = EpochTable(
+            f"{base}/curated",
+            "doc_id long, source string, quality double, rate_ppm long",
+            ("doc_id",),
+        )
         # 1. the snapshot batch job: spec + rates over the curated
         # snapshot, persisted for the stream (rates must come from a
         # snapshot, not per-batch counts — per-batch rates would make
@@ -887,11 +870,10 @@ def qs15_stream_preprocess_pipeline(
                 salt=QX60_SALT,
             )
             with pinned(gated_df) as gated:
-                write_epoch(
+                curated.commit(
                     gated.select(
                         "doc_id", "source", "quality", "rate_ppm"
                     ).repartition(1),
-                    out,
                     epoch_id,
                 )
                 dedup(gated.select("doc_id", "text"), epoch_id)
@@ -917,14 +899,7 @@ def qs15_stream_preprocess_pipeline(
             .select("doc_id")
         )
         return snapshot_result(
-            spark.read.schema(
-                "doc_id long, source string, quality double, "
-                "rate_ppm long, epoch int"
-            )
-            .parquet(out)
-            .select("doc_id", "source", "quality", "rate_ppm")
-            .dropDuplicates(["doc_id"])
-            .join(drops, "doc_id", "left_anti"),
+            curated.read_set(spark).join(drops, "doc_id", "left_anti"),
             "qs15",
         )
 

@@ -12,13 +12,14 @@ doc arriving exactly once, a pair (a, b) is emitted exactly when the
 later of a, b arrives — the union of per-batch pair sets equals
 ``lsh_candidate_pairs`` over the full corpus.
 
-Retention: both tables are epoch-partitioned for replay idempotency,
-and epochs older than the replayable window are periodically FOLDED
-into one consolidated ``epoch=-1`` partition — directory count stays
-O(keep_epochs), not O(stream lifetime), and the consolidated
-partition is compacted on a SIZE-TIERED schedule so total rewrite
-work over the stream's lifetime is amortized O(N log N), never the
-O(N²) of rewriting the whole corpus every few batches. See
+Retention: both tables are :class:`EpochTable` tables, the format
+every stream sink in the package writes: epoch-partitioned for replay
+idempotency, and epochs older than the replayable window are
+periodically FOLDED into one consolidated ``epoch=-1`` partition —
+directory count stays O(keep_epochs), not O(stream lifetime), and the
+consolidated partition is compacted on a SIZE-TIERED schedule so total
+rewrite work over the stream's lifetime is amortized O(N log N), never
+the O(N²) of rewriting the whole corpus every few batches. See
 ``_compact_old_epochs``.
 """
 
@@ -27,6 +28,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,8 +43,9 @@ from gh_archive_clickhouse_spark.operators.dedup import (
 # Reserved partition value for the consolidated (compacted) epochs.
 COMPACTED_EPOCH = -1
 
-PAIRS_SCHEMA = "doc_a long, doc_b long, epoch int"
-SIGS_SCHEMA = "doc_id long, minhash array<bigint>, epoch int"
+# Columns of the pair log and the signature table other than ``epoch``.
+PAIRS_SCHEMA = "doc_a long, doc_b long"
+SIGS_SCHEMA = "doc_id long, minhash array<bigint>"
 LABELS_SCHEMA = "doc_id long, cluster_rep long"
 
 
@@ -256,82 +259,120 @@ def write_epoch(
     )
 
 
-def incremental_lsh_sink(
-    sig_path: str,
-    pairs_path: str,
-    shingle_k: int = 3,
-    bands: int = 4,
-    rows_per_band: int = 4,
-    keep_epochs: int = 4,
-):
-    """foreachBatch callable maintaining the signature table and the
-    discovered-pairs log.
+@dataclass(frozen=True)
+class EpochTable:
+    """An epoch-partitioned parquet table written from ``foreachBatch``
+    — the one place that knows the format: one ``epoch=E`` partition
+    per batch (under any ``sub_partitions`` dirs), committed with
+    :func:`write_epoch`, folded into ``epoch=-1`` by
+    :func:`_compact_old_epochs`, and read back with an explicit
+    schema.
 
-    REPLAY-IDEMPOTENT: Spark re-runs a failed epoch through
-    foreachBatch, so both tables are partitioned by epoch and written
-    with DYNAMIC partition overwrite — a replay rewrites its own
-    epoch's partition instead of appending duplicates; other epochs
-    are untouched. Per-epoch increments are compacted to a few files
-    (post-compute repartition), and epochs older than the replayable
-    window fold into one consolidated partition per
-    ``_compact_old_epochs`` — the table's directory count is bounded
-    by O(keep_epochs) for the stream's whole lifetime, and the
-    consolidation is rewritten only on the size-tiered schedule.
+    ``schema`` is the DDL of every column but ``epoch`` (sub-partition
+    columns included); ``key`` identifies a row, so the major fold and
+    :meth:`read_set` collapse replay and crash duplicates on it.
     """
 
+    path: str
+    schema: str
+    key: tuple[str, ...]
+    sub_partitions: tuple[str, ...] = ()
+    keep_epochs: int = 4
+
+    def commit(self, df: DataFrame, epoch_id: int) -> str:
+        """Write ``df`` as epoch ``epoch_id`` (a replay rewrites it),
+        then fold the committed epochs; returns the fold kind."""
+        write_epoch(df, self.path, epoch_id, *self.sub_partitions)
+        return _compact_old_epochs(
+            df.sparkSession,
+            self.path,
+            f"{self.schema}, epoch int",
+            int(epoch_id),
+            dedup_cols=list(self.key),
+            keep_epochs=self.keep_epochs,
+            partition_cols=["epoch", *self.sub_partitions],
+        )
+
+    def read(
+        self, spark: SparkSession, exclude_epoch: int | None = None
+    ) -> DataFrame:
+        """Every committed row, without the ``epoch`` column, skipping
+        epoch ``exclude_epoch`` when given. The explicit schema reads a
+        table whose batches wrote no rows. Before the first commit the
+        frame is an empty relation, which the optimizer drops from a
+        union."""
+        if not os.path.exists(self.path):
+            return spark.createDataFrame([], self.schema).limit(0)
+        df = spark.read.schema(f"{self.schema}, epoch int").parquet(
+            self.path
+        )
+        if exclude_epoch is not None:
+            df = df.filter(F.col("epoch") != int(exclude_epoch))
+        return df.drop("epoch")
+
+    def read_set(self, spark: SparkSession) -> DataFrame:
+        """:meth:`read` with one row per ``key``: at-least-once
+        replays and a crash inside the major fold can leave
+        duplicates."""
+        return self.read(spark).dropDuplicates(list(self.key))
+
+
+def pairs_table(path: str, keep_epochs: int = 4) -> EpochTable:
+    """The discovered-pairs log at ``path``."""
+    return EpochTable(
+        path, PAIRS_SCHEMA, ("doc_a", "doc_b"), keep_epochs=keep_epochs
+    )
+
+
+def incremental_lsh_sink(
+    sig_path: str, pairs_path: str, keep_epochs: int = 4
+):
+    """foreachBatch callable maintaining two :class:`EpochTable`
+    tables: the signature table and the discovered-pairs log.
+
+    REPLAY-IDEMPOTENT: Spark re-runs a failed epoch through
+    foreachBatch, and a commit rewrites its own epoch's partition
+    instead of appending duplicates; other epochs are untouched.
+    Per-epoch increments are compacted to a few files (post-compute
+    repartition), and epochs older than the replayable window fold
+    into one consolidated partition per ``_compact_old_epochs`` — the
+    table's directory count is bounded by O(keep_epochs) for the
+    stream's whole lifetime, and the consolidation is rewritten only
+    on the size-tiered schedule. Banding and shingling are the batch
+    ``lsh_candidate_pairs`` defaults, so the union of the per-batch
+    pair sets equals the batch pair set.
+    """
+    sigs = EpochTable(
+        sig_path, SIGS_SCHEMA, ("doc_id",), keep_epochs=keep_epochs
+    )
+    pairs = pairs_table(pairs_path, keep_epochs)
+
     def _write(batch_df: DataFrame, epoch_id: int) -> dict:
-        spark = batch_df.sparkSession
         # ONE signature build per batch, pinned in the block manager:
         # both consumers (the epoch write and the pair join's probe
         # side) read this checkpoint, so the minhash pipeline (shingle
         # explode + 16-way hash aggregate) runs exactly once. Both
-        # writes run on the calling (stream) thread, so every job of
+        # commits run on the calling (stream) thread, so every job of
         # the batch is in the query's job group and ``query.stop()``
         # can cancel it. localCheckpoint round-trips the long arrays
         # exactly (same blocks), so the pairs are identical.
-        with pinned(
-            minhash_signatures(batch_df, shingle_k=shingle_k)
-        ) as sigs_new:
+        with pinned(minhash_signatures(batch_df)) as sigs_new:
             # The probe side unions the PRIOR epochs from disk with
             # the new checkpoint — equal to a "whole table including
             # the just-written epoch E" read: each doc lives in
-            # exactly one epoch, and on a replay the epoch != E filter
-            # excludes E's stale partition exactly as the dynamic
-            # overwrite replaces it.
-            if os.path.exists(sig_path):
-                old_sigs = (
-                    spark.read.schema(SIGS_SCHEMA)
-                    .parquet(sig_path)
-                    .filter(F.col("epoch") != int(epoch_id))
-                    .drop("epoch")
-                )
-                all_sigs = old_sigs.unionByName(sigs_new)
-            else:
-                all_sigs = sigs_new
-            pairs = lsh_candidate_pairs_between(
-                sigs_new,
-                all_sigs,
-                bands=bands,
-                rows_per_band=rows_per_band,
+            # exactly one epoch, and on a replay excluding E skips
+            # E's stale partition exactly as the commit replaces it.
+            # The pairs commit goes first: the signature fold may move
+            # the very files this read lists.
+            all_sigs = sigs.read(
+                batch_df.sparkSession, exclude_epoch=epoch_id
+            ).unionByName(sigs_new)
+            pairs_fold = pairs.commit(
+                lsh_candidate_pairs_between(sigs_new, all_sigs)
+                .repartition(1),
+                epoch_id,
             )
-            write_epoch(sigs_new.repartition(4), sig_path, epoch_id)
-            write_epoch(pairs.repartition(1), pairs_path, epoch_id)
-        sig_fold = _compact_old_epochs(
-            spark,
-            sig_path,
-            SIGS_SCHEMA,
-            int(epoch_id),
-            dedup_cols=["doc_id"],
-            keep_epochs=keep_epochs,
-        )
-        pairs_fold = _compact_old_epochs(
-            spark,
-            pairs_path,
-            PAIRS_SCHEMA,
-            int(epoch_id),
-            dedup_cols=["doc_a", "doc_b"],
-            keep_epochs=keep_epochs,
-        )
+            sig_fold = sigs.commit(sigs_new.repartition(4), epoch_id)
         # foreachBatch ignores the return value; composing sinks
         # (incremental_dedup_sink) use it to share the fold cadence.
         return {"sigs": sig_fold, "pairs": pairs_fold}
@@ -368,33 +409,18 @@ def fold_cluster_labels(
         connected_components,
     )
 
-    pairs = (
-        spark.read.schema(PAIRS_SCHEMA)
-        .parquet(pairs_path)
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    labels = connected_components(pairs)
-    # Pinned before the overwrite: CC's lineage reads the pair log,
-    # and (unlike the epoch fold) labels_path is a separate table, so
-    # only the lineage-truncation half of the fold's
-    # read-then-overwrite discipline is needed. Same storage
-    # lifecycle as the fold's pin: the refresh runs once per
-    # major-fold cadence for the stream's lifetime, so its blocks are
-    # released as soon as the overwrite commits (consumers read the
-    # labels TABLE, never this frame); a failed write is recomputed
-    # from the pair log.
-    with pinned(labels) as snap:
-        snap.write.mode("overwrite").parquet(labels_path)
+    # Written without a pin of its own: CC's result already reads its
+    # last round's checkpoint, which the convergence probe computed,
+    # and labels_path is a separate table from the pair log it reads.
+    connected_components(
+        pairs_table(pairs_path).read_set(spark)
+    ).write.mode("overwrite").parquet(labels_path)
 
 
 def incremental_dedup_sink(
     sig_path: str,
     pairs_path: str,
     labels_path: str,
-    shingle_k: int = 3,
-    bands: int = 4,
-    rows_per_band: int = 4,
     keep_epochs: int = 4,
 ):
     """foreachBatch callable: incremental LSH pair discovery PLUS a
@@ -418,14 +444,7 @@ def incremental_dedup_sink(
     yet"), so the documented survivors-cut read never hits
     PATH_NOT_FOUND early in the stream's life.
     """
-    inner = incremental_lsh_sink(
-        sig_path,
-        pairs_path,
-        shingle_k=shingle_k,
-        bands=bands,
-        rows_per_band=rows_per_band,
-        keep_epochs=keep_epochs,
-    )
+    inner = incremental_lsh_sink(sig_path, pairs_path, keep_epochs)
 
     def _write(batch_df: DataFrame, epoch_id: int) -> dict:
         if not os.path.exists(labels_path):

@@ -19,8 +19,9 @@ the incrementally-built index is row-identical to the batch build —
 assignment and encoding are per-row map functions, so batch slicing
 cannot change them.
 
-Retention mirrors the LSH signature table (dedup_stream.py): epoch
-partitions are dynamic-overwrite idempotent under foreachBatch replay,
+Retention mirrors the LSH signature table: the index is an
+``EpochTable`` (dedup_stream.py) whose epoch partitions are
+dynamic-overwrite idempotent under foreachBatch replay,
 and epochs older than the replayable window fold into the consolidated
 ``epoch=-1`` partition — directory count stays O(keep_epochs ×
 clusters) for the stream's lifetime, the per-cluster sublayout
@@ -39,14 +40,11 @@ from pyspark.sql import functions as F
 from gh_archive_clickhouse_spark.operators.similarity import (
     ivfpq_index_rows,
 )
-from gh_archive_clickhouse_spark.streaming.dedup_stream import (
-    _compact_old_epochs,
-    write_epoch,
-)
+from gh_archive_clickhouse_spark.streaming.dedup_stream import EpochTable
 
 INDEX_SCHEMA = (
     "vec_id long, codes array<int>, vec array<double>, norm double, "
-    "epoch int, cluster_id int"
+    "cluster_id int"
 )
 
 
@@ -90,25 +88,19 @@ def incremental_ivfpq_sink(
         )
     # The fold reads the table back with an explicit schema; it must
     # name the actual id column, not assume the default.
-    schema = INDEX_SCHEMA.replace("vec_id", id_col, 1)
+    index = EpochTable(
+        index_path,
+        INDEX_SCHEMA.replace("vec_id", id_col, 1),
+        (id_col,),
+        sub_partitions=("cluster_id",),
+        keep_epochs=keep_epochs,
+    )
 
     def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         rows = ivfpq_index_rows(
             batch_df, codebook, cents, m=m, dim=dim,
             id_col=id_col, vec_col=vec_col,
         )
-        write_epoch(
-            rows.repartition("cluster_id"), index_path, epoch_id, "cluster_id"
-        )
-        _compact_old_epochs(
-            spark,
-            index_path,
-            schema,
-            int(epoch_id),
-            dedup_cols=[id_col],
-            keep_epochs=keep_epochs,
-            partition_cols=["epoch", "cluster_id"],
-        )
+        index.commit(rows.repartition("cluster_id"), epoch_id)
 
     return _write

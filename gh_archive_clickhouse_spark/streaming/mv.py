@@ -19,9 +19,9 @@ a replayed epoch rewrites its own partition. A crash between the
 compaction fold's write and cleanup can leave duplicate rows, so every
 partial row carries its ``src_epoch`` as a DATA column: both the
 reader and the next fold first dropDuplicates on (key, src_epoch),
-making duplicates harmless everywhere. Old epochs fold into the
-consolidated partition via the same machinery as the LSH index
-(dedup_stream._compact_old_epochs) — directory count stays
+making duplicates harmless everywhere. The partials are an
+``EpochTable`` (streaming/dedup_stream.py), like the LSH index: old
+epochs fold into the consolidated partition — directory count stays
 O(keep_epochs) for the stream's lifetime, with the consolidation
 rewritten only on that machinery's size-tiered schedule.
 """
@@ -31,24 +31,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gh_archive_clickhouse_spark.streaming.dedup_stream import (
-    _compact_old_epochs,
-    write_epoch,
-)
+from gh_archive_clickhouse_spark.streaming.dedup_stream import EpochTable
 
 PARTIALS_SCHEMA = (
     "day string, event_type string, n long, min_eid long, max_eid long, "
-    "src_epoch int, epoch int"
+    "src_epoch int"
 )
 
 _KEY = ["day", "event_type"]
 
 
+def _partials(path: str, keep_epochs: int = 4) -> EpochTable:
+    return EpochTable(
+        path, PARTIALS_SCHEMA, (*_KEY, "src_epoch"), keep_epochs=keep_epochs
+    )
+
+
 def incremental_rollup_sink(partials_path: str, keep_epochs: int = 4):
     """foreachBatch callable maintaining the daily-rollup MV partials."""
+    partials = _partials(partials_path, keep_epochs)
 
     def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         partial = (
             batch_df.groupBy(
                 F.date_format("ts", "yyyyMMdd").alias("day"),
@@ -61,15 +64,7 @@ def incremental_rollup_sink(partials_path: str, keep_epochs: int = 4):
             )
             .withColumn("src_epoch", F.lit(int(epoch_id)))
         )
-        write_epoch(partial.repartition(1), partials_path, epoch_id)
-        _compact_old_epochs(
-            spark,
-            partials_path,
-            PARTIALS_SCHEMA,
-            int(epoch_id),
-            dedup_cols=_KEY + ["src_epoch"],
-            keep_epochs=keep_epochs,
-        )
+        partials.commit(partial.repartition(1), epoch_id)
 
     return _write
 
@@ -77,12 +72,12 @@ def incremental_rollup_sink(partials_path: str, keep_epochs: int = 4):
 def rollup_view(spark: SparkSession, partials_path: str) -> DataFrame:
     """The readable MV: fold partial states to final values.
 
-    dropDuplicates on (key, src_epoch) first — crash-duplicate partial
-    rows collapse before the exact count/min/max fold.
+    One row per (key, src_epoch) first — crash-duplicate partial rows
+    collapse before the exact count/min/max fold.
     """
-    partials = spark.read.schema(PARTIALS_SCHEMA).parquet(partials_path)
     return (
-        partials.dropDuplicates(_KEY + ["src_epoch"])
+        _partials(partials_path)
+        .read_set(spark)
         .groupBy(*_KEY)
         .agg(
             F.sum("n").alias("n_events"),

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from tests.conftest import cached_rdd_ids, wait_rdds_gone
 
 from gh_archive_clickhouse_spark.streaming.dedup_stream import (
+    COMPACTED_EPOCH,
     FOLD_MANIFEST,
     _compact_old_epochs,
 )
@@ -183,6 +184,65 @@ def test_major_fold_bucket_count_scales_with_bytes(spark, tmp_path):
     assert got.select("doc_id").distinct().count() == 8000
 
 
+def test_epoch_table_commit_and_read_back(spark, tmp_path):
+    """EpochTable on a cluster_id sub-partitioned table: empty (with
+    the schema) before the first commit; across six commits and their
+    folds every row is read back once, without the epoch column; an
+    excluded epoch is skipped; and the folded rows keep the
+    ``epoch=-1/cluster_id=C`` layout."""
+    from gh_archive_clickhouse_spark.streaming.dedup_stream import (
+        EpochTable,
+    )
+
+    table = EpochTable(
+        str(tmp_path / "t"),
+        "vec_id long, cluster_id int",
+        ("vec_id",),
+        sub_partitions=("cluster_id",),
+        keep_epochs=2,
+    )
+    empty = table.read(spark)
+    assert empty.count() == 0
+    assert empty.schema.simpleString() == (
+        "struct<vec_id:bigint,cluster_id:int>"
+    )
+    kinds = [
+        table.commit(
+            spark.range(e * 100, e * 100 + 100).select(
+                F.col("id").alias("vec_id"),
+                (F.col("id") % 3).cast("int").alias("cluster_id"),
+            ),
+            e,
+        )
+        for e in range(6)
+    ]
+    assert "major" in kinds and "none" in kinds, kinds
+
+    got = table.read(spark)
+    assert got.columns == ["vec_id", "cluster_id"]
+    rows = got.collect()
+    assert sorted(r.vec_id for r in rows) == list(range(600))
+    assert all(r.cluster_id == r.vec_id % 3 for r in rows)
+    assert sorted(
+        r.vec_id for r in table.read(spark, exclude_epoch=5).collect()
+    ) == list(range(500))
+
+    cons = tmp_path / "t" / f"epoch={COMPACTED_EPOCH}"
+    assert sorted(d.name for d in cons.iterdir() if d.is_dir()) == [
+        "cluster_id=0", "cluster_id=1", "cluster_id=2",
+    ]
+    folded = 0
+    for c in range(3):
+        ids = [
+            r.vec_id
+            for r in spark.read.parquet(str(cons / f"cluster_id={c}"))
+            .collect()
+        ]
+        assert ids and all(i % 3 == c for i in ids)
+        folded += len(ids)
+    assert folded == 400  # epochs 0-3 folded; 4 and 5 are in the window
+
+
 def test_incremental_dedup_sink_refreshes_labels_on_major_fold(
     spark, tmp_path
 ):
@@ -282,28 +342,15 @@ def test_major_fold_releases_its_checkpoint(spark, tmp_path):
     assert spark.read.schema(SCHEMA).parquet(path).count() == 400
 
 
-def test_fold_cluster_labels_releases_its_snapshot(
-    spark, tmp_path, monkeypatch
-):
-    """The label refresh's result checkpoint is released once the
-    labels table is written (consumers read the TABLE, never the
-    frame). CC's per-round lazy materializes are session-scoped by
-    design (measured minor, adjudicated r10) — so the assertion
-    targets the refresh's OWN snapshot: the release hook fired,
-    reported success, and that specific RDD left the block manager."""
-    from gh_archive_clickhouse_spark import checkpoints
+def test_fold_cluster_labels_releases_its_snapshot(spark, tmp_path):
+    """The label refresh leaves no snapshot of its own to release: it
+    writes CC's result, which already reads CC's last-round
+    checkpoint, straight to the labels table. The labels are the
+    connected components of the pair log.
+    test_storage_stays_flat_across_many_folds guards the block
+    manager across many refreshes."""
     from gh_archive_clickhouse_spark.streaming import dedup_stream
 
-    released = []
-    real = checkpoints.release_checkpoint
-
-    def _spy(df):
-        rid = checkpoints.checkpoint_rdd_handle(df).id()
-        ok = real(df)
-        released.append((rid, ok))
-        return ok
-
-    monkeypatch.setattr(checkpoints, "release_checkpoint", _spy)
     pairs_path = str(tmp_path / "pairs")
     spark.createDataFrame(
         [(1, 2, 0), (2, 3, 0)], "doc_a long, doc_b long, epoch int"
@@ -311,8 +358,6 @@ def test_fold_cluster_labels_releases_its_snapshot(
     labels_path = str(tmp_path / "labels")
     dedup_stream.fold_cluster_labels(spark, pairs_path, labels_path)
 
-    assert [ok for _, ok in released] == [True]
-    assert wait_rdds_gone(spark, {released[0][0]})
     got = {
         (r.doc_id, r.cluster_rep)
         for r in spark.read.parquet(labels_path).collect()

@@ -691,8 +691,7 @@ def test_scratch_tables_are_garbage_collected(
 ):
     """Scratch materializations don't accumulate across jobs: a new
     application's first scratch write sweeps expired trees left by
-    finished applications, live/current trees are protected, and a
-    caller-NAMED durable index is never touched."""
+    finished applications and live/current trees are protected."""
     import os
     import time
 
@@ -716,23 +715,18 @@ def test_scratch_tables_are_garbage_collected(
     live = tmp_path / "_scratch" / "local-live" / "sigs_0"
     live.mkdir(parents=True)
     (live / "part-0.parquet").write_bytes(b"x")
-    # a named durable index: never swept
-    durable_src = spark.range(3)
-    materialize(durable_src, "my_index", durable=True)
 
     df = materialize(spark.range(5), "scratch_frame")
     assert df.count() == 5
     apps = sorted(p.name for p in (tmp_path / "_scratch").iterdir())
     assert "local-dead" not in apps          # expired tree swept
     assert "local-live" in apps              # fresh tree protected
-    assert (tmp_path / "my_index").exists()  # durable never touched
 
     # second "run": explicit end-of-job sweep with no age grace
     cur = spark.sparkContext.applicationId
     removed = sweep_scratch(current_app_id=None, min_age_seconds=0)
     assert set(removed) >= {"local-live", cur}
     assert not list((tmp_path / "_scratch").iterdir())
-    assert (tmp_path / "my_index").exists()
 
 
 def test_snapshot_result_releases_previous_invocation(spark):
