@@ -671,9 +671,9 @@ def qs13_stream_dedup_survivors(
     against documents) asserts: the qs4 union-of-batches equivalence,
     one level up."""
     from gh_archive_clickhouse_spark.streaming.dedup_stream import (
-        LABELS_SCHEMA,
         fold_cluster_labels,
         incremental_dedup_sink,
+        survivors,
     )
 
     docs = read(spark, sf_dir, "documents")
@@ -689,15 +689,8 @@ def qs13_stream_dedup_survivors(
             # Close the books: a 2-batch run never reaches the major
             # fold, so this is the on-demand exact refresh.
             fold_cluster_labels(spark, pairs_path, labels_path)
-        drops = (
-            spark.read.schema(LABELS_SCHEMA)
-            .parquet(labels_path)
-            .filter(F.col("doc_id") != F.col("cluster_rep"))
-            .select("doc_id")
-        )
         return snapshot_result(
-            docs.join(drops, "doc_id", "left_anti").select("doc_id"),
-            "qs13",
+            survivors(docs, labels_path).select("doc_id"), "qs13"
         )
 
 
@@ -814,10 +807,10 @@ def qs15_stream_preprocess_pipeline(
         _ranked_weight_rows,
     )
     from gh_archive_clickhouse_spark.streaming.dedup_stream import (
-        LABELS_SCHEMA,
         EpochTable,
         fold_cluster_labels,
         incremental_dedup_sink,
+        survivors,
     )
 
     docs = read(spark, sf_dir, "documents")
@@ -892,15 +885,8 @@ def qs15_stream_preprocess_pipeline(
             fold_cluster_labels(
                 spark, f"{base}/pairs", f"{base}/labels"
             )
-        drops = (
-            spark.read.schema(LABELS_SCHEMA)
-            .parquet(f"{base}/labels")
-            .filter(F.col("doc_id") != F.col("cluster_rep"))
-            .select("doc_id")
-        )
         return snapshot_result(
-            curated.read_set(spark).join(drops, "doc_id", "left_anti"),
-            "qs15",
+            survivors(curated.read_set(spark), f"{base}/labels"), "qs15"
         )
 
 

@@ -5,25 +5,30 @@ The reference hand-rolls: an hour-key generator (:301-314), a bounded
 worker pool (:239-269), per-file exponential-backoff retry (:250-263),
 gunzip + line scanning (:80-99), and batched inserts (:120-153). Here:
 
-- hour keys become a small DataFrame, ``repartition(jobs)`` is the
-  worker pool, and Spark's scheduler + ``spark.task.maxFailures`` is
-  the retry isolation;
+- the worker pool is a JVM ``range`` over the hour keys sliced
+  ``jobs`` ways, each row picking its key out of one array literal
+  (no Python-RDD key frame, no shuffle before the first file opens),
+  and Spark's scheduler + ``spark.task.maxFailures`` is the retry
+  isolation;
 - the per-hour HTTP fetch + gunzip runs in ``mapInPandas`` (Arrow
   batches out, no Python row objects), with the same
-  404-tolerated / retry-on-5xx policy (:67-78);
+  404-tolerated / retry-on-5xx policy (:67-78), and lines are cut on
+  ``\n`` only, one trailing ``\r`` stripped, as ``bufio.ScanLines``
+  does (:80-99);
 - parsing and the partitioned write reuse ndjson.py / sinks.py — the
   batched-INSERT machinery disappears into the DataFrame writer.
 
-At cluster scale each task streams one hour file (~100 MB compressed)
-— the reference's measured ~340 MB/job RAM envelope (README.md:51-53)
-maps to ordinary executor memory; 1000 executors backfill years of
-archive in one job.
+Each task downloads one whole compressed hour (~100 MB at archive
+scale) so a retry restarts from a complete body, then holds that
+hour's decompressed lines in memory while it emits them — a few
+hundred MB per task, ordinary executor memory next to the reference's
+measured ~340 MB/job envelope (README.md:51-53); 1000 executors
+backfill years of archive in one job.
 """
 
 from __future__ import annotations
 
 import gzip
-import io
 import time
 import urllib.error
 import urllib.request
@@ -32,6 +37,7 @@ from datetime import datetime, timedelta
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from gh_archive_clickhouse_spark.sources.ndjson import parse_raw_events
 
@@ -86,11 +92,20 @@ def fetch_hours(
 ) -> DataFrame:
     """Distributed fetch: hour keys → one NDJSON line per row.
 
-    Output columns: key (hour key), value (raw JSON line).
+    Output columns: key (hour key), value (raw JSON line). The keys
+    travel as one newline-joined literal that the optimizer folds to a
+    single array constant, so the plan is ``MapInPandas ← Project ←
+    Range(splits=jobs)`` whatever the key count; a key holding a
+    newline raises ``ValueError``.
     """
-    keys_df = spark.createDataFrame(
-        [(k,) for k in keys], schema="key string"
-    ).repartition(jobs)
+    if any("\n" in k for k in keys):
+        raise ValueError("hour keys must not contain a newline")
+    keys_df = spark.range(len(keys), numPartitions=jobs).select(
+        F.element_at(
+            F.split(F.lit("\n".join(keys)), "\n"),
+            (F.col("id") + 1).cast("int"),
+        ).alias("key")
+    )
 
     def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -100,8 +115,11 @@ def fetch_hours(
                 )
                 if blob is None:
                     continue
-                with gzip.open(io.BytesIO(blob), "rt", encoding="utf-8") as fh:
-                    lines = [ln for ln in fh.read().splitlines() if ln]
+                # "\n" only: str.splitlines would also cut at U+2028,
+                # U+0085 and the like, which JSON allows raw in strings
+                text = gzip.decompress(blob).decode("utf-8")
+                lines = [ln.removesuffix("\r") for ln in text.split("\n")]
+                lines = [ln for ln in lines if ln]
                 if lines:
                     yield pd.DataFrame({"key": key, "value": lines})
 

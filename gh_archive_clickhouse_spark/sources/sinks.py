@@ -3,8 +3,10 @@ as partitioned/sorted Parquet (/root/reference/README.md:9-17):
 
 - ``PARTITION BY toYYYYMMDD(ts)``  → ``partitionBy(dt)`` with
   dt = yyyyMMdd(ts); Catalyst prunes partitions on date predicates.
-- ``ORDER BY (ts, id)``            → ``sortWithinPartitions(ts, id)``;
-  Parquet min/max page stats then give range pruning inside a day.
+- ``ORDER BY (ts, id)``            → ``sortWithinPartitions(dt, ts, id)``;
+  ``dt`` leads because the planned write sorts on it and would
+  otherwise drop the ``(ts, id)`` order. Parquet min/max page stats
+  then give range pruning inside a day.
 - ``raw ... CODEC(ZSTD(16))``      → parquet zstd codec (session conf).
 - ReplacingMergeTree dedup-on-merge → ``dedup_view`` read semantics +
   an idempotent ``compact`` job (the analog of background merges and of
@@ -36,7 +38,7 @@ def write_events(
     """Write the raw events table with the contract layout."""
     (
         with_dt(df, ts_col)
-        .sortWithinPartitions(ts_col, "id")
+        .sortWithinPartitions(DT_COL, ts_col, "id")
         .write.mode(mode)
         .partitionBy(DT_COL)
         .parquet(path)
@@ -62,7 +64,7 @@ def compact(spark: SparkSession, path: str, out_path: str) -> None:
     df = read_events(spark, path)
     deduped = dedup_view(df)
     (
-        deduped.sortWithinPartitions("ts", "id")
+        deduped.sortWithinPartitions(DT_COL, "ts", "id")
         .write.mode("overwrite")
         .partitionBy(DT_COL)
         .parquet(out_path)

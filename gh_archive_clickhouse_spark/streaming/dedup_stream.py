@@ -417,6 +417,20 @@ def fold_cluster_labels(
     ).write.mode("overwrite").parquet(labels_path)
 
 
+def survivors(df: DataFrame, labels_path: str) -> DataFrame:
+    """The survivors cut over a labels table written by
+    :func:`fold_cluster_labels`: ``df`` without the docs whose label
+    is another doc (``doc_id != cluster_rep``). Never-paired docs are
+    absent from the table and survive."""
+    drops = (
+        df.sparkSession.read.schema(LABELS_SCHEMA)
+        .parquet(labels_path)
+        .filter(F.col("doc_id") != F.col("cluster_rep"))
+        .select("doc_id")
+    )
+    return df.join(drops, "doc_id", "left_anti")
+
+
 def incremental_dedup_sink(
     sig_path: str,
     pairs_path: str,
@@ -441,8 +455,8 @@ def incremental_dedup_sink(
 
     The labels table EXISTS from the first batch: before the first
     major fold an EMPTY table is seeded (meaning "no drops known
-    yet"), so the documented survivors-cut read never hits
-    PATH_NOT_FOUND early in the stream's life.
+    yet"), so a :func:`survivors` read never hits PATH_NOT_FOUND
+    early in the stream's life.
     """
     inner = incremental_lsh_sink(sig_path, pairs_path, keep_epochs)
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from gh_archive_clickhouse_spark.operators.ttl import drop_expired_partitions
 from gh_archive_clickhouse_spark.sources.gharchive import (
     backfill,
+    fetch_hours,
     hour_keys,
 )
 from gh_archive_clickhouse_spark.sources.ndjson import load_events
@@ -158,6 +159,95 @@ def test_backfill_fetch_with_404_gap(spark):
         assert df.agg(F.min("id"), F.max("id")).first() == (0, 9)
     finally:
         server.shutdown()
+
+
+def _unsorted_part_files(root: Path) -> list[str]:
+    """Part files under ``root``'s ``dt=`` directories whose rows are
+    not in ``(ts, id)`` order."""
+    import pyarrow.parquet as pq
+
+    bad = []
+    for f in sorted(root.glob("dt=*/*.parquet")):
+        t = pq.read_table(f, columns=["ts", "id"])
+        keys = list(zip(t["ts"].to_pylist(), t["id"].to_pylist()))
+        if keys != sorted(keys):
+            bad.append(str(f.relative_to(root)))
+    return bad
+
+
+def test_events_part_files_sorted_on_ts_id(spark, tmp_path):
+    """ORDER BY (ts, id) holds inside every part file of both the
+    ingested and the compacted table. The planned write sorts on
+    ``dt``; a ``(ts, id)`` sort that does not lead with ``dt`` is
+    dropped under it."""
+    # 3 days from 4 input partitions, rows in scrambled (ts, id) order,
+    # 3 rows per ts so the id tie-break is exercised
+    df = spark.range(6000, numPartitions=4).selectExpr(
+        "(id * 7919) % 6000 AS id",
+        "timestamp_seconds(1577836800 + ((id * 104729) % 2000) * 120) AS ts",
+        "CAST(id AS string) AS raw",
+    )
+    out, comp = tmp_path / "events", tmp_path / "compacted"
+    write_events(df, str(out))
+    compact(spark, str(out), str(comp))
+    for root in (out, comp):
+        assert len(list(root.glob("dt=*"))) == 3
+        assert list(root.glob("dt=*/*.parquet"))
+        assert _unsorted_part_files(root) == []
+
+
+def _raw_event(i: int, **extra) -> str:
+    ev = {"id": str(i), "created_at": "2020-01-01T15:04:05Z", **extra}
+    return json.dumps(ev, ensure_ascii=False, separators=(",", ":"))
+
+
+# Lines the reference's bufio.ScanLines keeps whole: U+2028, U+2029 and
+# U+0085 raw inside strings (json.dumps(ensure_ascii=False) writes them
+# so), a bare CR as whitespace between tokens, and a CRLF line ending.
+_SEPARATOR_EVENTS = [
+    _raw_event(0, msg="para\u2028graph"),
+    _raw_event(1, msg="next\u0085line"),
+    _raw_event(2, msg="page\u2029break"),
+    '{"id":"3",\r"created_at":"2020-01-01T15:04:05Z"}',
+    _raw_event(4, msg="crlf"),
+]
+
+
+class _SeparatorHourHandler(_ArchiveHandler):
+    payload = gzip.compress(("\n".join(_SEPARATOR_EVENTS) + "\r\n").encode())
+
+
+def test_backfill_keeps_lines_with_unicode_separators(spark):
+    server = http.server.ThreadingHTTPServer(
+        ("127.0.0.1", 0), _SeparatorHourHandler
+    )
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        df = backfill(
+            spark,
+            "2020-01-01T15",
+            "2020-01-01T16",
+            base_url=f"http://127.0.0.1:{server.server_port}",
+            jobs=2,
+            max_retries=2,
+            backoff_s=0.01,
+        )
+        got = {r["id"]: r["raw"] for r in df.select("id", "raw").collect()}
+        assert got == dict(enumerate(_SEPARATOR_EVENTS))
+    finally:
+        server.shutdown()
+
+
+def test_fetch_hours_worker_pool_is_a_range_without_shuffle(spark):
+    keys = hour_keys("2020-01-01T00", "2020-01-01T07")
+    df = fetch_hours(spark, keys, base_url="http://127.0.0.1:9", jobs=3)
+    qe = df._jdf.queryExecution()
+    assert qe.toRdd().getNumPartitions() == 3
+    plan = qe.executedPlan().toString()
+    assert "Exchange" not in plan
+    assert "ExistingRDD" not in plan
+    with pytest.raises(ValueError):
+        fetch_hours(spark, ["2020-01-01-0\n2020-01-01-1"])
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
